@@ -4,7 +4,7 @@
 media decode) against under-partitioned inputs. On a real cluster a big
 table arrives in thousands of file splits and this is a no-op; locally a
 small single-file parquet otherwise serializes the whole stage onto one
-core of local[32].
+core.
 """
 
 from __future__ import annotations

@@ -304,7 +304,9 @@ def _mod4_hist(sf_dir: str) -> tuple[list[int], int] | None:
     per (path, size, mtime): planning metadata of the INPUT file, not a
     result cache; when the stat itself fails the computed histogram is
     returned WITHOUT memoizing (a later rewrite of the file must not be
-    served a stale histogram — r13 ADVICE).
+    served a stale histogram). The key is
+    :func:`~market_microstructure_toolkit_spark.sources.events.events_identity`,
+    shared with the book-plan memo of ``plans/book.py``.
 
     SIZE-DISPATCHED (round 14, r13 verdict #1): under the driver-pull
     gate the histogram is one in-process pyarrow column decode; above
@@ -316,17 +318,16 @@ def _mod4_hist(sf_dir: str) -> tuple[list[int], int] | None:
 
     import pyarrow.parquet as pq
 
+    from market_microstructure_toolkit_spark.sources.events import (
+        events_identity,
+    )
+
     path = f"{sf_dir}/events.parquet"
-    memo_ok = True
-    try:
-        st = _os.stat(path)
-        memo_key = (_os.path.abspath(path), st.st_size, st.st_mtime_ns)
-    except OSError:
-        memo_key = (_os.path.abspath(path),)
-        memo_ok = False
-    hit = _KEY_HIST_MEMO.get(memo_key)
-    if hit is not None:
-        return hit
+    memo_key = events_identity(sf_dir)
+    if memo_key is not None:
+        hit = _KEY_HIST_MEMO.get(memo_key)
+        if hit is not None:
+            return hit
     try:
         import glob as _glob
 
@@ -377,7 +378,7 @@ def _mod4_hist(sf_dir: str) -> tuple[list[int], int] | None:
         _MOD4_LAST_ERR[:] = [f"{type(exc).__name__}: {exc}"]
         return None
     out = (counts, int(n_null))
-    if memo_ok:
+    if memo_key is not None:
         _KEY_HIST_MEMO[memo_key] = out
     return out
 

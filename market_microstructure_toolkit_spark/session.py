@@ -12,12 +12,20 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Defaults chosen for the local[32] test environment; on a real cluster the
-# same keys are what you would tune (shuffle partitions ~2-3x total cores,
-# AQE handles the rest at runtime).
+# Defaults for a local[N] session; on a real cluster the same keys are
+# what you would tune. Shuffles start at a fixed partition count that AQE
+# coalesces at runtime toward one task per core (parallelismFirst), and
+# the per-partition floor below keeps that target in force for small
+# shuffles.
 _DEFAULT_CONFS: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    # The coalescing floor defaults to 1 MB, which sizes partitions by
+    # bytes: a window shuffle of well under 1 MB per key would be packed
+    # into fewer tasks than it has keys. A sliding frame costs CPU per
+    # row, not per byte, so the floor stays near zero and every symbol
+    # of the book windows keeps a task (a core) of its own.
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize": "1b",
     "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.shuffle.partitions": "32",
     "spark.sql.execution.arrow.pyspark.enabled": "true",

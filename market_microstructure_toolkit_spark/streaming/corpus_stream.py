@@ -69,6 +69,11 @@ def stateful_exact_dedup(
     earlier ids arrive first, the emitted canonical ids equal the batch
     ``exact_dedup`` answer (min id per content hash) — the property the
     ``streaming_dedup_replay`` gate hash-checks against its SQL oracle.
+
+    Rows with a NULL id are dropped before the state operator: they can
+    never be canonical (``MIN`` skips NULLs), so a content seen only
+    with NULL ids emits nothing. NULL text is one content of its own,
+    keyed by a NULL hash, as in the batch ``GROUP BY``.
     """
 
     def fn(
@@ -83,7 +88,8 @@ def stateful_exact_dedup(
         for f in pdfs:
             if len(f):
                 # ndarray min — Series.min adds ~30µs/key of dispatch
-                # for the same integer (doc_id is non-null int64)
+                # for the same integer (NULL ids are filtered upstream,
+                # so doc_id arrives as non-null int64)
                 m = int(f[id_col].values.min())
                 first_id = m if first_id is None else min(first_id, m)
         if first_id is None:
@@ -94,7 +100,7 @@ def stateful_exact_dedup(
         out.iat[0, 1] = first_id
         yield out
 
-    hashed = stream.select(
+    hashed = stream.filter(F.col(id_col).isNotNull()).select(
         F.md5(F.col(text_col)).alias("content_hash"), F.col(id_col)
     )
     return hashed.groupBy("content_hash").applyInPandasWithState(

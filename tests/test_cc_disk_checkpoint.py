@@ -68,6 +68,24 @@ def test_disk_mode_fixpoint_matches_local(spark):
     assert _clusters_sorted(spark, "1") == EXPECTED
 
 
+def test_non_numeric_shuffle_partitions(spark, monkeypatch):
+    """A non-numeric ``spark.sql.shuffle.partitions`` (e.g. ``auto``,
+    which some platforms accept) must not crash the edge layout sizing:
+    it falls back to the core count."""
+    real_get = spark.conf.get
+    seen = []
+
+    def get(key, *args, **kwargs):
+        if key == "spark.sql.shuffle.partitions":
+            seen.append(key)
+            return "auto"
+        return real_get(key, *args, **kwargs)
+
+    monkeypatch.setattr(spark.conf, "get", get)
+    assert _clusters_sorted(spark, "0") == EXPECTED
+    assert seen
+
+
 def test_disk_mode_sets_checkpoint_dir(spark):
     _clusters_sorted(spark, "1")
     assert spark.sparkContext._jsc.sc().getCheckpointDir().isDefined()

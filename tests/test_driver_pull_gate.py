@@ -8,14 +8,13 @@ constants."""
 
 from __future__ import annotations
 
-import importlib
-
 import pytest
 
 
-def _reload_base(monkeypatch, **env):
+def _gate_env(monkeypatch, **env):
     """Apply env overrides and clear the histogram memo so each test
-    exercises a fresh dispatch decision."""
+    exercises a fresh dispatch decision. The gates read their env per
+    call, so the module needs no reload."""
     from market_microstructure_toolkit_spark.plans import base as B
 
     for k, v in env.items():
@@ -25,23 +24,23 @@ def _reload_base(monkeypatch, **env):
 
 
 def test_parquet_column_raises_over_gate(monkeypatch, sf_dir):
-    B = _reload_base(monkeypatch, SPARK_GRAFT_PULL_MAX_BYTES="1")
+    B = _gate_env(monkeypatch, SPARK_GRAFT_PULL_MAX_BYTES="1")
     with pytest.raises(ValueError, match="size"):
         B.parquet_column(f"{sf_dir}/events.parquet", "event_type")
 
 
 def test_parquet_column_rows_gate(monkeypatch, sf_dir):
-    B = _reload_base(monkeypatch, SPARK_GRAFT_PULL_MAX_ROWS="1")
+    B = _gate_env(monkeypatch, SPARK_GRAFT_PULL_MAX_ROWS="1")
     with pytest.raises(ValueError, match="size"):
         B.parquet_column(f"{sf_dir}/events.parquet", "event_type")
 
 
 def test_mod4_hist_spark_fallback_exact(monkeypatch, spark, sf_dir):
     """The distributed histogram equals the arrow one bit-for-bit."""
-    B = _reload_base(monkeypatch)
+    B = _gate_env(monkeypatch)
     arrow_hist = B._mod4_hist(sf_dir)
     assert arrow_hist is not None
-    B = _reload_base(monkeypatch, SPARK_GRAFT_PULL_MAX_BYTES="1")
+    B = _gate_env(monkeypatch, SPARK_GRAFT_PULL_MAX_BYTES="1")
     spark_hist = B._mod4_hist(sf_dir)
     B._KEY_HIST_MEMO.clear()
     assert spark_hist == arrow_hist
@@ -61,9 +60,9 @@ def test_mod4_hist_spark_fallback_negative_and_null(monkeypatch, spark, tmp_path
         pa.table({"user_id": pa.array(ids, type=pa.int64())}),
         d / "events.parquet",
     )
-    B = _reload_base(monkeypatch)
+    B = _gate_env(monkeypatch)
     arrow_hist = B._mod4_hist(str(d))
-    B = _reload_base(monkeypatch, SPARK_GRAFT_PULL_MAX_BYTES="1")
+    B = _gate_env(monkeypatch, SPARK_GRAFT_PULL_MAX_BYTES="1")
     spark_hist = B._mod4_hist(str(d))
     B._KEY_HIST_MEMO.clear()
     assert arrow_hist == spark_hist
@@ -78,9 +77,9 @@ def test_book_symbols_same_both_paths(monkeypatch, spark, sf_dir):
         _book_symbols,
     )
 
-    B = _reload_base(monkeypatch)
+    B = _gate_env(monkeypatch)
     fast = _book_symbols(spark, sf_dir)
-    B = _reload_base(monkeypatch, SPARK_GRAFT_PULL_MAX_BYTES="1")
+    B = _gate_env(monkeypatch, SPARK_GRAFT_PULL_MAX_BYTES="1")
     slow = _book_symbols(spark, sf_dir)
     B._KEY_HIST_MEMO.clear()
     assert fast == slow == ["S0", "S1", "S2", "S3"]
@@ -91,9 +90,9 @@ def test_event_types_same_both_paths(monkeypatch, spark, sf_dir):
         _event_types,
     )
 
-    _reload_base(monkeypatch)
+    _gate_env(monkeypatch)
     fast = _event_types(spark, sf_dir)
-    _reload_base(monkeypatch, SPARK_GRAFT_PULL_MAX_BYTES="1")
+    _gate_env(monkeypatch, SPARK_GRAFT_PULL_MAX_BYTES="1")
     slow = _event_types(spark, sf_dir)
     assert fast == slow
     assert len(fast) >= 1
@@ -136,7 +135,7 @@ def test_hist_not_memoized_on_stat_failure(monkeypatch, sf_dir):
     under the path-only key."""
     import os
 
-    B = _reload_base(monkeypatch)
+    B = _gate_env(monkeypatch)
     real_stat = os.stat
 
     def bad_stat(p, *a, **kw):

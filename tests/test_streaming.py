@@ -209,6 +209,54 @@ def test_stateful_dedup_suppresses_cross_batch_duplicates(spark, tmp_path):
     assert len(rows) == 3  # one emission per distinct content, ever
 
 
+def test_stateful_dedup_null_keys(spark, tmp_path):
+    """A micro-batch with NULL ids and NULL text: NULL ids never become
+    canonical (a content seen only with NULL ids emits nothing), and
+    NULL text is one content of its own, as in the batch GROUP BY."""
+    from market_microstructure_toolkit_spark.streaming.corpus_stream import (
+        stateful_exact_dedup,
+    )
+
+    sch = "doc_id long, text string"
+    a = spark.createDataFrame(
+        [(None, "alpha"), (3, "alpha"), (None, "beta"), (4, None)], sch
+    )
+    b = spark.createDataFrame(
+        [(2, "alpha"), (None, "delta"), (7, "beta"), (5, None)], sch
+    )
+    a.coalesce(1).write.parquet(str(tmp_path / "in" / "a"))
+    time.sleep(0.05)
+    b.coalesce(1).write.parquet(str(tmp_path / "in" / "b"))
+    stream = (
+        spark.readStream.schema(sch)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(tmp_path / "in" / "*"))
+    )
+    q = (
+        stateful_exact_dedup(stream)
+        .writeStream.format("memory")
+        .queryName("dedup_null_sink")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    assert q.exception() is None
+    md5 = {
+        t: r[0]
+        for t in ("alpha", "beta")
+        for r in spark.sql(f"SELECT md5('{t}')").collect()
+    }
+    got = sorted(
+        (r["content_hash"] or "", r["canonical_doc_id"])
+        for r in spark.table("dedup_null_sink").collect()
+    )
+    # alpha: first seen in batch a with id 3 (the NULL id is skipped);
+    # beta: batch a had only a NULL id, so batch b's 7 is canonical;
+    # NULL text: 4 from batch a; delta: only a NULL id, never emitted
+    assert got == sorted([(md5["alpha"], 3), (md5["beta"], 7), ("", 4)])
+
+
 def test_session_window_merges_across_micro_batches(spark, tmp_path):
     """A user whose events straddle the micro-batch split must come out
     as ONE session: the session-window state store carries the open
