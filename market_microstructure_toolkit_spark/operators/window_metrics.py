@@ -284,6 +284,55 @@ def add_depth_ofi(
 # W10/W13 — rolling correlation, tail limit
 # ---------------------------------------------------------------------------
 
+def _moment_states(*specs: WindowSpec) -> list[Column]:
+    """Running moments of the null-aligned pair ``__rc_x``/``__rc_y``
+    over each window in ``specs``, as one struct per window: pair count,
+    means, population (co)variances and the x and y ranges."""
+    x, y = F.col("__rc_x"), F.col("__rc_y")
+    aggs = {
+        "n": F.count(x),
+        "mx": F.avg(x),
+        "my": F.avg(y),
+        "vx": F.var_pop(x),
+        "vy": F.var_pop(y),
+        "cxy": F.covar_pop(x, y),
+        "x_lo": F.min(x),
+        "x_hi": F.max(x),
+        "y_lo": F.min(y),
+        "y_hi": F.max(y),
+    }
+    return [
+        F.struct(*[agg.over(w).alias(name) for name, agg in aggs.items()])
+        for w in specs
+    ]
+
+
+def _merged_corr_sql(a: str, b: str) -> str:
+    """SQL for the correlation of moment states ``a`` and ``b`` merged by
+    Chan, Golub & LeVeque's pairwise update; a NULL ``a`` is an empty
+    state. One SQL expression, parsed in one JVM call: the same formula
+    as a Column tree took ~670 more py4j round trips to build."""
+
+    def z(field: str) -> str:
+        return f"coalesce({field}, 0D)"
+
+    na, nb = z(f"{a}.n"), f"{b}.n"
+    dx = f"({z(f'{b}.mx')} - {z(f'{a}.mx')})"
+    dy = f"({z(f'{b}.my')} - {z(f'{a}.my')})"
+    ok = (
+        f"least({a}.x_lo, {b}.x_lo) < greatest({a}.x_hi, {b}.x_hi)"
+        f" AND least({a}.y_lo, {b}.y_lo) < greatest({a}.y_hi, {b}.y_hi)"
+    )
+    f = f"(CASE WHEN {ok} THEN {na} * {nb} / ({na} + {nb}) END)"
+
+    def comoment(v: str, d1: str, d2: str) -> str:
+        return f"({z(f'{a}.{v}')} * {na} + {z(f'{b}.{v}')} * {nb} + {d1} * {d2} * {f})"
+
+    m2x, m2y = comoment("vx", dx, dx), comoment("vy", dy, dy)
+    den = f"(sqrt({m2x}) * sqrt({m2y}))"
+    return f"CASE WHEN {den} > 0 THEN {comoment('cxy', dx, dy)} / {den} END"
+
+
 def add_rolling_corr(
     df: DataFrame,
     x_col: str,
@@ -291,31 +340,82 @@ def add_rolling_corr(
     window: int,
     out_col: str = "roll_corr",
     keys: tuple[str, ...] = S.PARTITION_KEYS,
-    order_col: str = "ts_ms",
+    order_col: str | list = "ts_ms",
 ) -> DataFrame:
     """Rolling Pearson correlation over the last ``window`` rows (W10,
-    advanced_plots.py:169).
+    advanced_plots.py:169), in O(1) work per row.
 
-    Computed from guarded moment aggregates (covar_samp / stddev product)
-    rather than ``F.corr``: under ANSI mode (Spark 4 default) a windowed
-    CORR RAISES DIVIDE_BY_ZERO on any zero-variance window — one
-    constant-mid run of ``window`` ticks kills the whole query, which a
-    dense 100 TB tape WILL contain (first seen on the sf1 sweep). The
-    moment aggregates return NULL/0.0 instead, and the guard maps zero
-    variance to NULL — exactly SQL CORR's contract. Identical value
-    otherwise: cov/(sx*sy) = ck/sqrt(xMk*yMk) up to one fp rounding."""
-    w = book_window(keys, order_col).rowsBetween(-(window - 1), 0)
-    # null-align the pair: CORR drops a row when EITHER side is null, so
-    # each moment must see exactly the complete pairs (a bare
-    # stddev_samp(x) would also count rows whose y is null)
+    A sliding frame re-aggregates all ``window`` rows for every output
+    row. Here each frame is instead one merge of two running states
+    (the segment-tree idea of Leis et al., VLDB 2015):
+
+    - rows are numbered per key (``pos``) and cut into blocks of
+      ``window`` rows;
+    - two ``ROWS UNBOUNDED PRECEDING`` windows per block, which Spark
+      evaluates incrementally, give each row a prefix state (block start
+      to the row) and a suffix state (the row to block end). A state is
+      the pair count, means, ``var_pop`` of x and y, ``covar_pop`` and
+      the min/max of x and y; times n, the (co)variances are the central
+      sums M2x, M2y and the co-moment Cxy;
+    - the frame ``[pos-window+1, pos]`` is the suffix state of row
+      ``pos-window+1`` (a ``lag``) merged with this row's prefix state by
+      Chan, Golub & LeVeque's pairwise update; a row that closes its
+      block is its prefix state alone.
+
+    Pairs are null-aligned first, as SQL CORR drops a row when EITHER
+    side is null. The result is ``Cxy / sqrt(M2x * M2y)``, NULL unless
+    min < max on both x and y (which implies n >= 2). That is exact
+    constant-frame detection: the merged means of a constant frame can
+    differ by a rounding, so a test on the merged M2 would not catch it,
+    while a frame with any two distinct values has M2 > 0. NaN or
+    infinite moments fail ``den > 0`` and give NULL as well.
+
+    ANSI safety: under ANSI mode (Spark 4 default) a windowed ``F.corr``
+    RAISES DIVIDE_BY_ZERO on any zero-variance frame, and one
+    constant-mid run of ``window`` ticks is enough. Here the only
+    divisions are ``nA * nB / n``, evaluated only inside the min < max
+    guard (n >= 2 there), and ``Cxy / den`` behind ``den > 0``; CASE
+    WHEN evaluates its value only when its condition holds.
+
+    Plan: the per-key order sort, then one (keys, block, pos) sort
+    descending for the suffix window and one ascending that serves both
+    the lag and the prefix window. The (keys, block) windows reuse the
+    per-key hash partitioning: no shuffle beyond the per-key one."""
+    order = [order_col] if isinstance(order_col, str) else list(order_col)
     pair = F.col(x_col).isNotNull() & F.col(y_col).isNotNull()
-    x = F.when(pair, F.col(x_col))
-    y = F.when(pair, F.col(y_col))
-    cov = F.covar_samp(x, y).over(w)
-    sx = F.stddev_samp(x).over(w)
-    sy = F.stddev_samp(y).over(w)
-    return df.withColumn(
-        out_col, F.when((sx > 0) & (sy > 0), cov / (sx * sy))
+    pos = F.col("__rc_pos")
+    by_key = Window.partitionBy(*keys)
+    by_blk = Window.partitionBy(*keys, "__rc_blk")
+    run = (Window.unboundedPreceding, Window.currentRow)
+    sfx, pfx = _moment_states(
+        by_blk.orderBy(pos.desc()).rowsBetween(*run),
+        by_blk.orderBy(pos).rowsBetween(*run),
+    )
+    staged = (
+        df.select(
+            "*",
+            F.when(pair, F.col(x_col).cast("double")).alias("__rc_x"),
+            F.when(pair, F.col(y_col).cast("double")).alias("__rc_y"),
+            (F.row_number().over(by_key.orderBy(*order)) - 1).alias("__rc_pos"),
+        )
+        .withColumn("__rc_blk", pos - pos % window)
+        .withColumn("__rc_sfx", sfx)
+        .withColumn("__rc_pfx", pfx)
+        .withColumn(
+            "__rc_a",
+            F.when(
+                pos % window != window - 1,
+                F.lag("__rc_sfx", window - 1).over(
+                    by_key.orderBy("__rc_blk", "__rc_pos")
+                ),
+            ),
+        )
+    )
+    return staged.withColumn(
+        out_col, F.expr(_merged_corr_sql("__rc_a", "__rc_pfx"))
+    ).drop(
+        "__rc_x", "__rc_y", "__rc_pos", "__rc_blk", "__rc_sfx", "__rc_pfx",
+        "__rc_a",
     )
 
 
@@ -759,8 +859,10 @@ def add_rolling_corr_segmented(
     order_col: str | list = "ts_ms",
     n_chunks: int = 64,
 ) -> DataFrame:
-    """W10 rolling corr on the chunk+halo path — same guarded
-    pair-aligned moments as :func:`add_rolling_corr`, parallel per key."""
+    """W10 rolling corr on the chunk+halo path, parallel per key: the
+    guarded pair-aligned moments over a sliding frame per chunk. Same
+    NULL pattern as :func:`add_rolling_corr`, values equal up to
+    rounding."""
 
     def build(w):
         wf = w.rowsBetween(-(window - 1), 0)

@@ -595,21 +595,17 @@ def _corr_surface(
     can round to -0.0 on one engine and 0.0 on the other, and the
     driver's repr-based hash distinguishes them).
 
+    The plain path computes both lag features over the per-key window
+    and hands them to :func:`W.add_rolling_corr`, which merges running
+    per-block moment states in O(1) per row instead of re-scanning a
+    50-row sliding frame.
+
     In segmented mode BOTH lag-derived features (OFI, return) compute
     inside the chunk+halo path as stage 1, the 50-row moments as stage
     2 (total lookback 1 + 49 -> window=51) — no per-key global window
     in any phase."""
     book = synthetic_book(spark, sf_dir)
     mid2 = F.col("best_bid") + F.col("best_ask")
-
-    def corr_cols(w, wf):
-        ofi_x, ret_y = F.col("ofi"), F.col("ret_bps")
-        pair = ofi_x.isNotNull() & ret_y.isNotNull()
-        x, y = F.when(pair, ofi_x), F.when(pair, ret_y)
-        cov = F.covar_samp(x, y).over(wf)
-        sx = F.stddev_samp(x).over(wf)
-        sy = F.stddev_samp(y).over(wf)
-        return F.when((sx > 0) & (sy > 0), cov / (sx * sy))
 
     if not segmented:
         w = W.book_window(KEYS, ORDER_COLS)
@@ -619,8 +615,20 @@ def _corr_surface(
         feat = feat.withColumn(
             "ret_bps", (mid2 / F.lag(mid2).over(w) - F.lit(1.0)) * F.lit(1e4)
         )
-        corr = feat.withColumn("__c", corr_cols(w, w.rowsBetween(-49, 0)))
+        corr = W.add_rolling_corr(
+            feat, "ofi", "ret_bps", 50, out_col="__c", keys=KEYS,
+            order_col=ORDER_COLS,
+        )
     else:
+
+        def corr_cols(wf):
+            ofi_x, ret_y = F.col("ofi"), F.col("ret_bps")
+            pair = ofi_x.isNotNull() & ret_y.isNotNull()
+            x, y = F.when(pair, ofi_x), F.when(pair, ret_y)
+            cov = F.covar_samp(x, y).over(wf)
+            sx = F.stddev_samp(x).over(wf)
+            sy = F.stddev_samp(y).over(wf)
+            return F.when((sx > 0) & (sy > 0), cov / (sx * sy))
 
         def build(w):
             return [
@@ -629,7 +637,7 @@ def _corr_surface(
                     "ret_bps": (mid2 / F.lag(mid2).over(w) - F.lit(1.0))
                     * F.lit(1e4),
                 },
-                {"__c": corr_cols(w, w.rowsBetween(-49, 0))},
+                {"__c": corr_cols(w.rowsBetween(-49, 0))},
             ]
 
         corr = W.rolling_segmented(

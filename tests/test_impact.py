@@ -191,10 +191,19 @@ def test_sell_sim_uses_naive_convention(spark):
     assert s["slippage_bps_vs_mid_open"] == pytest.approx(1e4 * (mid / vwap - 1.0))
 
 
-def test_simulators_reject_multi_instrument_frames(spark, eth):
-    from pyspark.sql import functions as F
+def test_simulators_reject_multi_instrument_frames(spark):
+    from tests.test_row_metrics import _book_df, _fake_row
 
-    merged = eth.union(eth.withColumn("symbol", F.lit("OTHER/USDT")))
+    merged = _book_df(
+        spark,
+        [
+            _fake_row(),
+            _fake_row(ts_ms=1_700_000_001_000, raw_nonce=43),
+            _fake_row(symbol="OTHER/USDT"),
+            _fake_row(symbol="OTHER/USDT", ts_ms=1_700_000_001_000, raw_nonce=43),
+        ],
+        3,
+    )
     with pytest.raises(ValueError, match="single-instrument"):
         simulate_twap_naive(merged, "buy", 1.0, 2, 3)
 

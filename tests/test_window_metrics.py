@@ -5,6 +5,8 @@ including the reset-on-gap variant (metrics.py:196-232)."""
 from __future__ import annotations
 
 import math
+import random
+from fractions import Fraction
 
 import pytest
 
@@ -725,3 +727,132 @@ class TestRollingSegmented:
                 # OFFSET window, which runs on the n_segments-row agg —
                 # identified by its __cnt/__segoff input
                 assert "__cnt" in m.group(1) or "__segoff" in m.group(1), plan
+
+
+class TestRollingCorr:
+    """``add_rolling_corr`` merges per-block prefix/suffix moment states;
+    it must reproduce the sliding-frame formula (kept here only as the
+    reference) with ANSI mode on: identical NULL pattern, values within
+    1e-12 of it, or of the exact value where the reference itself loses
+    digits. The data holds NULL pairs, constant x and y runs longer than
+    every window, a +-0.0 run, a run without complete pairs and a key
+    shorter than the window."""
+
+    KEY_ROWS = (("A", 7), ("B", 130), ("C", 400))
+
+    @pytest.fixture
+    def ansi(self, spark):
+        prev = spark.conf.get("spark.sql.ansi.enabled")
+        spark.conf.set("spark.sql.ansi.enabled", "true")
+        yield spark
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+
+    def _rows(self):
+        rnd = random.Random(7)
+        rows = []
+        for sym, n in self.KEY_ROWS:
+            for i in range(n):
+                x, y = rnd.gauss(0.0, 1.0), rnd.gauss(5.0, 2.0)
+                if i % 11 == 0:
+                    x = None  # NULL pairs, from either side
+                if i % 17 == 0:
+                    y = None
+                # constant runs longer than any window; 0.1 and 1.1 have
+                # no exact binary form, so block means of the same run
+                # can differ in the last bit
+                if 40 <= i < 110:
+                    x = 0.1
+                if 200 <= i < 260:
+                    y = 1.1
+                if 300 <= i < 360:
+                    x = 0.0 if i % 2 else -0.0  # +-0.0 is one value
+                if 370 <= i < 395:
+                    x = None  # a frame with no complete pair at all
+                rows.append(("e", sym, 1_000 + 7 * i, i, x, y))
+        return rows
+
+    def _df(self, spark):
+        return spark.createDataFrame(
+            self._rows(),
+            "exchange_id string, symbol string, ts_ms long, raw_nonce long,"
+            " x double, y double",
+        )
+
+    def _exact(self, window):
+        """Correlation of every frame in exact rational arithmetic, one
+        rounding at the end: the yardstick where the sliding formula's
+        own Welford sums lose digits to cancellation."""
+        out, rows = {}, self._rows()
+        for sym, n in self.KEY_ROWS:
+            series = [r for r in rows if r[1] == sym]
+            for i in range(n):
+                frame = [
+                    (Fraction(r[4]), Fraction(r[5]))
+                    for r in series[max(0, i - window + 1): i + 1]
+                    if r[4] is not None and r[5] is not None
+                ]
+                if len(frame) < 2:
+                    continue
+                mx = sum(p[0] for p in frame) / len(frame)
+                my = sum(p[1] for p in frame) / len(frame)
+                sxx = sum((p[0] - mx) ** 2 for p in frame)
+                syy = sum((p[1] - my) ** 2 for p in frame)
+                sxy = sum((p[0] - mx) * (p[1] - my) for p in frame)
+                if sxx and syy:
+                    r2 = float(sxy * sxy / (sxx * syy))
+                    out[(sym, i)] = math.copysign(math.sqrt(r2), sxy)
+        return out
+
+    @staticmethod
+    def _sliding(df, window, order):
+        wf = W.book_window(KEYS, order).rowsBetween(-(window - 1), 0)
+        pair = F.col("x").isNotNull() & F.col("y").isNotNull()
+        x, y = F.when(pair, F.col("x")), F.when(pair, F.col("y"))
+        cov = F.covar_samp(x, y).over(wf)
+        sx = F.stddev_samp(x).over(wf)
+        sy = F.stddev_samp(y).over(wf)
+        return df.withColumn("c", F.when((sx > 0) & (sy > 0), cov / (sx * sy)))
+
+    @pytest.mark.parametrize("window", [2, 15, 50, 51])
+    def test_matches_sliding_frame(self, ansi, window):
+        spark = ansi
+        df = self._df(spark)
+        order = ["ts_ms", "raw_nonce"]
+        key = lambda r: (r.symbol, r.raw_nonce)
+        ref = {key(r): r.c for r in self._sliding(df, window, order).collect()}
+        got = {
+            key(r): r.c
+            for r in W.add_rolling_corr(
+                df, "x", "y", window, out_col="c", order_col=order
+            ).collect()
+        }
+        assert got.keys() == ref.keys()
+        assert len(got) == sum(n for _, n in self.KEY_ROWS)
+        nulls = {k for k, v in ref.items() if v is None}
+        assert {k for k, v in got.items() if v is None} == nulls
+        assert len(nulls) < len(ref)  # the data must exercise both arms
+        exact = self._exact(window)
+        assert exact.keys() == ref.keys() - nulls
+        for k, v in ref.items():
+            if v is None:
+                continue
+            if abs(v - exact[k]) <= 1e-12:
+                assert got[k] == pytest.approx(v, abs=1e-12), k
+            else:
+                # the sliding formula itself is off here (near-equal
+                # values cancel in its M2): hold the result to the exact
+                # value instead
+                assert got[k] == pytest.approx(exact[k], abs=1e-12), k
+        # a key shorter than the window still gets its growing frames
+        if window > 7:
+            assert any(got[("A", i)] is not None for i in range(7))
+
+    def test_no_new_exchange(self, spark):
+        """The (keys, block) windows reuse the per-key hash partitioning:
+        one shuffle in all."""
+        out = W.add_rolling_corr(
+            self._df(spark), "x", "y", 50, out_col="c",
+            order_col=["ts_ms", "raw_nonce"],
+        )
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("Exchange ") == 1, plan

@@ -250,6 +250,12 @@ RULES: dict[tuple[str, str], tuple[str, str]] = {
         "dispatched",
         "plain form of W6; gates dispatch to add_rolling_rv_reset_segmented",
     ),
+    ("window_metrics.py", "add_rolling_corr"): (
+        "dispatched",
+        "plain form of W10; gates dispatch to the chunk+halo corr path. The per-key spec numbers rows and lags "
+        "the suffix state (one task per key, like any plain series window); the (key, block) specs hold "
+        "window rows each and reuse the per-key hash partitioning",
+    ),
     ("window_metrics.py", "tail_n"): (
         "topk-grouplimit",
         "row_number desc filtered to n",
