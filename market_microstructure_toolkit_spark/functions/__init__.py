@@ -21,3 +21,6 @@ from market_microstructure_toolkit_spark.functions.arrays import (  # noqa: F401
     valid_levels,
     walk_book,
 )
+from market_microstructure_toolkit_spark.functions.decimal_sum import (  # noqa: F401
+    exact_decimal_sum,
+)

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from market_microstructure_toolkit_spark.functions.decimal_sum import exact_decimal_sum
 from market_microstructure_toolkit_spark.operators import window_metrics as W
 from market_microstructure_toolkit_spark.plans.base import (
     _events_fx,
@@ -435,7 +436,10 @@ def q_events_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     results. Salting is for the case AQE's skew split can't fix (one
     key bigger than a task); on this uniform fixture it costs one extra
     narrow stage. Value sums use the repo's DECIMAL money idiom
-    (order-free exact, rounded at 2 dp before the double cast)."""
+    (order-free exact, rounded at 2 dp before the double cast) through
+    ``functions.exact_decimal_sum``: the oracle's SUM(CAST(value AS
+    DECIMAL(18,2))) value and type, accumulated in BIGINT halves
+    (precision <= 18, up to ~8.6e9 rows per group)."""
     from market_microstructure_toolkit_spark.partitioning import salted_join
 
     ev = _events_fx(spark, sf_dir).select("user_id", "value")
@@ -445,7 +449,7 @@ def q_events_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = salted_join(ev, cust, on="user_id", n_salts=8)
     return joined.groupBy("user_id", "c_mktsegment").agg(
         F.count(F.lit(1)).alias("n_events"),
-        F.sum(F.col("value").cast("decimal(18,2)"))
+        exact_decimal_sum("value", 18, 2)
         .cast("double")
         .alias("total_value"),
     )
@@ -518,7 +522,7 @@ def q_events_scd2_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = scd2_join(ev, dim, key="user_id", ts_col="ms")
     return joined.groupBy("segment", "event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
-        F.round(F.sum(F.col("value").cast("decimal(18,2)")), 2)
+        F.round(exact_decimal_sum("value", 18, 2), 2)
         .cast("double")
         .alias("total_value"),
     )
@@ -564,7 +568,7 @@ def q_events_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     def partial(batch: DataFrame) -> DataFrame:
         return batch.groupBy("event_type", "day").agg(
             F.count(F.lit(1)).alias("cnt"),
-            F.sum(F.col("value").cast("decimal(18,2)")).alias("vsum"),
+            exact_decimal_sum("value", 18, 2).alias("vsum"),
             F.min("value").alias("vmin"),
             F.max("value").alias("vmax"),
         )
@@ -804,7 +808,7 @@ def q_events_cube_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ev.cube("event_type", "day").agg(
         (F.grouping("event_type") * 2 + F.grouping("day")).alias("grouping_id"),
         F.count(F.lit(1)).alias("n_events"),
-        F.round(F.sum(F.col("value").cast("decimal(18,2)")), 2)
+        F.round(exact_decimal_sum("value", 18, 2), 2)
         .cast("double")
         .alias("total_value"),
     ).select("event_type", "day", "grouping_id", "n_events", "total_value")

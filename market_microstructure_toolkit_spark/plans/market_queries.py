@@ -9,6 +9,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from market_microstructure_toolkit_spark.functions import arrays as A
 from market_microstructure_toolkit_spark.functions import microstructure as M
+from market_microstructure_toolkit_spark.functions.decimal_sum import exact_decimal_sum
 from market_microstructure_toolkit_spark.operators import row_metrics as RM
 from market_microstructure_toolkit_spark.operators import trades as T
 from market_microstructure_toolkit_spark.operators import window_metrics as W
@@ -401,19 +402,21 @@ FROM stats
 def q_book_level_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A3 avg size/price per level + W11 slope along the level axis
     (advanced_plots.py:193-269). One melt projection, one partial-agg
-    shuffle. DECIMAL accumulation keeps averages order-free-exact."""
+    shuffle. The sums are the oracle's exact ``SUM(CAST(x AS
+    DECIMAL(18,6)))``, so the averages do not depend on row order, but
+    accumulated by ``functions.exact_decimal_sum`` in two BIGINT halves
+    per value rather than in a DECIMAL(28,6) buffer (same value and type;
+    precision <= 18, up to ~8.6e9 rows per group)."""
     from market_microstructure_toolkit_spark.operators import depth as D
 
     book = synthetic_book(spark, sf_dir)
     long = D.melt_levels(book, BOOK_DEPTH)
     stats = long.groupBy("exchange_id", "symbol", "side", "level").agg(
         (
-            F.sum(F.col("size").cast("decimal(18,6)")).cast("double")
-            / F.count("size")
+            exact_decimal_sum("size", 18, 6).cast("double") / F.count("size")
         ).alias("avg_size"),
         (
-            F.sum(F.col("price").cast("decimal(18,6)")).cast("double")
-            / F.count("price")
+            exact_decimal_sum("price", 18, 6).cast("double") / F.count("price")
         ).alias("avg_price"),
         F.count("size").alias("n_obs"),
     )

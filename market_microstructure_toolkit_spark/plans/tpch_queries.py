@@ -4,6 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from market_microstructure_toolkit_spark.functions.decimal_sum import exact_decimal_sum
 from market_microstructure_toolkit_spark.plans.base import (
     _scratch,
     register,
@@ -30,7 +31,10 @@ def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1-style pricing summary: filter -> partial-aggregated groupBy.
 
     Catalyst pushes the shipdate filter to the parquet scan and map-side
-    combines before the single shuffle on (returnflag, linestatus).
+    combines before the single shuffle on (returnflag, linestatus). The
+    DECIMAL(18,2) sums go through ``functions.exact_decimal_sum`` (BIGINT
+    buffers, same value and type as the oracle's SUM); the DECIMAL(24,8)
+    ones are above its precision-18 bound and stay plain SUMs.
     """
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     disc_price = F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
@@ -42,8 +46,8 @@ def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
-            F.sum(F.col("l_quantity").cast("decimal(18,2)")).cast("double").alias("sum_qty"),
-            F.sum(F.col("l_extendedprice").cast("decimal(18,2)")).cast("double").alias("sum_base_price"),
+            exact_decimal_sum("l_quantity", 18, 2).cast("double").alias("sum_qty"),
+            exact_decimal_sum("l_extendedprice", 18, 2).cast("double").alias("sum_base_price"),
             F.round(F.sum(disc_price.cast("decimal(24,8)")), 2).cast("double").alias("sum_disc_price"),
             F.round(F.sum(charge.cast("decimal(24,8)")), 2).cast("double").alias("sum_charge"),
             F.count(F.lit(1)).alias("count_order"),
@@ -279,7 +283,10 @@ def q_orders_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-shuffling two fact tables on every query and a metadata-only
     co-located merge; the oracle is the PLAIN join on the raw parquet,
     so hash-equality also proves bucketing is semantics-preserving.
-    Money sums use the DECIMAL idiom (order-free exact, 2 dp)."""
+    Money sums use the DECIMAL idiom (order-free exact, 2 dp). This one
+    sums DECIMAL(24,8), so it stays a plain SUM: the BIGINT-buffer
+    ``functions.exact_decimal_sum`` covers precision <= 18 only (and up
+    to ~8.6e9 rows per group)."""
     import uuid
 
     from market_microstructure_toolkit_spark.partitioning import write_bucketed

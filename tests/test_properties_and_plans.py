@@ -6,6 +6,7 @@ depends on at scale (pushdown, pruning, broadcast, distributed top-k)."""
 from __future__ import annotations
 
 import math
+import re
 
 import pytest
 from hypothesis import HealthCheck, given, settings
@@ -140,6 +141,14 @@ def test_window_metrics_single_exchange(spark, sf_dir):
     # all series metrics share one instrument-keyed shuffle
     plan = _plan(spark, sf_dir, "book_ofi_strict")
     assert plan.count("Exchange hashpartitioning") == 1
+
+
+def test_book_level_stats_sums_bigint_halves(spark, sf_dir):
+    # exact_decimal_sum: no DECIMAL(28,6) SUM buffer, two BIGINT SUMs
+    # per averaged column instead
+    plan = _plan(spark, sf_dir, "book_level_stats")
+    assert not re.search(r"sum\(cast\([^()]*as decimal\(18,6\)\)\)", plan), plan
+    assert plan.count("partial_sum(shiftright(") == 2, plan
 
 
 def test_lsh_banded_join_is_bucket_keyed_not_cartesian(spark, sf_dir):
