@@ -173,19 +173,10 @@ def _count_single_series(
         # callers that filtered to one instrument literal and derived
         # the count from source metadata. A negative value can only be
         # a caller bug — fail loudly instead of minting an empty/absurd
-        # schedule; SPARK_GRAFT_VALIDATE_HINTS=1 additionally re-runs
-        # the full distinct-probe validation against the hint.
+        # schedule.
         n_rows = int(n_rows)
         if n_rows < 0:
             raise ValueError(f"n_rows hint must be >= 0 (got {n_rows})")
-        import os as _os
-
-        if _os.environ.get("SPARK_GRAFT_VALIDATE_HINTS") == "1":
-            live = _count_single_series(df, narrow=narrow)
-            if live != n_rows:
-                raise ValueError(
-                    f"n_rows hint {n_rows} != live count {live}"
-                )
         return n_rows
     src = narrow if narrow is not None else df
     keys = _series_keys(df)
@@ -399,23 +390,9 @@ def simulate_twap_naive_grouped(
     # callers own the counts' exactness (same contract as the
     # single-series n_rows hint); the Spark aggregate is the fallback.
     if group_counts is not None:
-        import os as _os
-
         counts = list(group_counts.items())
         if any(n < 0 for _, n in counts):
             raise ValueError("group_counts hint holds a negative count")
-        if _os.environ.get("SPARK_GRAFT_VALIDATE_HINTS") == "1":
-            live = {
-                tuple(r[k] for k in keys): r["n"]
-                for r in df.groupBy(*keys)
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            }
-            if live != dict(group_counts):
-                raise ValueError(
-                    f"group_counts hint diverges from live counts: "
-                    f"{dict(group_counts)} != {live}"
-                )
     else:
         counts = [
             (tuple(r[k] for k in keys), r["n"])

@@ -14,6 +14,10 @@ from market_microstructure_toolkit_spark.plans.book import book_sql
 from market_microstructure_toolkit_spark.plans.book import synthetic_book
 from market_microstructure_toolkit_spark.plans.book import synthetic_trades
 from market_microstructure_toolkit_spark.plans.book import trades_sql
+from market_microstructure_toolkit_spark.sources.parquet_meta import column_chunks
+from market_microstructure_toolkit_spark.sources.parquet_meta import identity
+from market_microstructure_toolkit_spark.sources.parquet_meta import part_files
+from market_microstructure_toolkit_spark.sources.parquet_meta import row_group_stats
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -86,63 +90,41 @@ def q2k_sql(expr: str, k: int) -> str:
 
 
 def parquet_rows(path: str) -> int:
-    """Footer-only rowcount for a parquet file OR directory of part
-    files — a metadata pull (no Spark job, no data scan), the same
-    signal ``_tape_parts`` sizes streaming state by. Used to size-
-    dispatch the plain-vs-segmented window paths per key."""
-    import glob as _glob
-    import os as _os
-
+    """Footer-only rowcount of a parquet file, directory of part files
+    or chunk-dir glob (see :func:`part_files`) — a metadata pull (no
+    Spark job, no data scan), the same signal ``_tape_parts`` sizes
+    streaming state by. Used to size-dispatch the plain-vs-segmented
+    window paths per key."""
     import pyarrow.parquet as pq
 
-    files = (
-        sorted(_glob.glob(_os.path.join(path, "*.parquet")))
-        if _os.path.isdir(path)
-        else [path]
-    )
-    return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
+    return sum(pq.ParquetFile(f).metadata.num_rows for f in part_files(path))
 
 
 def parquet_col_range(path: str, col: str) -> tuple[int, int] | None:
     """(min, max) of an INTEGER column straight from the parquet
-    ROW-GROUP STATISTICS of a file or directory of part files — a
-    metadata pull, no Spark job. Integer min/max stats are exact (no
-    string-truncation caveat), so on success this equals
-    ``agg(min(col), max(col))`` over the raw scan. Returns None when the
-    column is missing or any row group lacks exact stats (caller falls
-    back to the Spark aggregate). Only valid for columns the planted
-    projections pass through UNCHANGED (doc_id, event_id, ts) — never
-    for derived or plant-modified columns."""
-    import glob as _glob
-    import os as _os
-
-    import pyarrow.parquet as pq
-
-    files = (
-        sorted(_glob.glob(_os.path.join(path, "*.parquet")))
-        if _os.path.isdir(path)
-        else [path]
-    )
-    lo: int | None = None
-    hi: int | None = None
-    for f in files:
-        md = pq.ParquetFile(f).metadata
-        try:
-            idx = md.schema.names.index(col)
-        except ValueError:
-            return None
-        for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(idx).statistics
-            if st is None or not st.has_min_max:
-                return None
-            mn, mx = st.min, st.max
-            if not isinstance(mn, int) or not isinstance(mx, int):
-                return None
-            lo = mn if lo is None else min(lo, mn)
-            hi = mx if hi is None else max(hi, mx)
-    if lo is None or hi is None:
+    ROW-GROUP STATISTICS of a file, directory of part files or chunk-dir
+    glob — a metadata pull, no Spark job. Integer min/max stats are
+    exact (no string-truncation caveat), so on success this equals
+    ``agg(min(col), max(col))`` over the raw scan. Returns None when
+    there are no files, the column is missing, any row group lacks
+    stats, or the column's logical values are not integers (DECIMAL,
+    DATE and TIMESTAMP statistics are, only in their raw form); the
+    caller falls back to the Spark aggregate. Only valid for columns the
+    planted projections pass through UNCHANGED (doc_id, event_id, ts) —
+    never for derived or plant-modified columns."""
+    stats = row_group_stats(part_files(path), col)
+    if not stats:
         return None
-    return lo, hi
+    lo = [st.min for st in stats]
+    hi = [st.max for st in stats]
+    if not all(isinstance(v, int) for v in lo + hi):
+        return None
+    return min(lo), max(hi)
+
+
+# perfbench/tracing.py binds these two names with getattr: keep them.
+_glob_parquet_rows = parquet_rows
+_glob_parquet_col_range = parquet_col_range
 
 
 def _pull_limits() -> tuple[int, int]:
@@ -169,54 +151,35 @@ def _column_pull_fits(files: list[str], col: str) -> bool:
     rowcount sit under :func:`_pull_limits`. Reads only footers (free —
     the same metadata the rowcount hints already read); False also when
     the column is missing, so callers fall back to their Spark path."""
-    import pyarrow.parquet as pq
-
     max_bytes, max_rows = _pull_limits()
-    rows = 0
-    nbytes = 0
-    for f in files:
-        md = pq.ParquetFile(f).metadata
-        try:
-            idx = md.schema.names.index(col)
-        except ValueError:
-            return False
-        rows += md.num_rows
-        for rg in range(md.num_row_groups):
-            nbytes += md.row_group(rg).column(idx).total_uncompressed_size
-        if rows > max_rows or nbytes > max_bytes:
-            return False
-    return True
+    chunks = column_chunks(files, col)
+    if chunks is None:
+        return False
+    rows = sum(n for n, _ in chunks)
+    nbytes = sum(c.total_uncompressed_size for _, c in chunks)
+    return rows <= max_rows and nbytes <= max_bytes
 
 
 def parquet_column(path: str, col: str):
     """ONE column of a parquet file (or dir of part files) as a pyarrow
-    ChunkedArray — an in-process columnar pull for planning constants
-    (round 13, guide §1.2): a gate that needs min/max/distinct of a
-    single source column pays a C++ column decode (~ms on the fixture
-    files, one core) instead of a full scheduled Spark job per
-    invocation. Computed from the parquet input on EVERY call — this is
-    a cheaper scan, not a cache. Only valid for columns the planted
-    projections pass through UNCHANGED; callers must fall back to the
-    Spark aggregate when the column's semantics differ from the raw
-    file's.
+    ChunkedArray — an in-process columnar pull for planning constants:
+    a gate that needs min/max/distinct of a single source column pays a
+    C++ column decode (~ms on the fixture files, one core) instead of a
+    full scheduled Spark job per invocation. Computed from the parquet
+    input on EVERY call — this is a cheaper scan, not a cache. Only
+    valid for columns the planted projections pass through UNCHANGED;
+    callers must fall back to the Spark aggregate when the column's
+    semantics differ from the raw file's.
 
-    SIZE-GATED (round 14, r13 verdict #1): raises ValueError when the
-    column's footer-metadata size exceeds :func:`_pull_limits` — every
-    caller already wraps this in try/except with a distributed Spark
-    fallback, so an over-threshold input (the 100 TB case) takes the
-    scale-safe aggregate instead of concatenating terabytes in driver
-    memory."""
-    import glob as _glob
-    import os as _os
-
+    SIZE-GATED: raises ValueError when the column's footer-metadata
+    size exceeds :func:`_pull_limits` — every caller wraps this in
+    try/except with a distributed Spark fallback, so an over-threshold
+    input (the 100 TB case) takes the scale-safe aggregate instead of
+    concatenating terabytes in driver memory."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    files = (
-        sorted(_glob.glob(_os.path.join(path, "*.parquet")))
-        if _os.path.isdir(path)
-        else [path]
-    )
+    files = part_files(path)
     if not _column_pull_fits(files, col):
         raise ValueError(
             f"parquet_column[{path}:{col}]: over the driver-pull size "
@@ -226,63 +189,42 @@ def parquet_column(path: str, col: str):
     return pa.concat_tables(tabs)[col]
 
 
+#: ticks per millisecond of the TIMESTAMP units parquet_ts_range accepts
+_TICKS_PER_MS = {"ms": 1, "us": 1_000, "ns": 1_000_000}
+
+
 def parquet_ts_range(path: str) -> tuple[int, int, int] | None:
     """(min, max) of the raw events ``ts`` TIMESTAMP column in the
     column's OWN unit ticks, plus ticks-per-millisecond, straight from
     parquet row-group statistics — ``(lo, hi, per_ms)`` with NO column
-    decode at all (round 14, r13 verdict #1: the former full-column
-    driver pull is a scale-killer; timestamps are physical INT64 whose
-    min/max statistics are exact). Returns None (caller falls back to
-    the Spark aggregate) when the column is missing/not a timestamp,
-    any row group lacks exact stats, any NULLs exist (mirroring the
-    pull path's null_count==0 requirement), or units disagree across
-    part files."""
-    import glob as _glob
-    import os as _os
-
+    decode at all (timestamps are physical INT64 whose min/max
+    statistics are exact). Returns None (caller falls back to the Spark
+    aggregate) when the column is missing/not a timestamp, its unit is
+    coarser than milliseconds, any row group lacks exact stats, any
+    NULLs exist (mirroring the pull path's null_count==0 requirement),
+    or units disagree across part files."""
     import pyarrow.parquet as pq
 
-    files = (
-        sorted(_glob.glob(_os.path.join(path, "*.parquet")))
-        if _os.path.isdir(path)
-        else [path]
-    )
-    lo: int | None = None
-    hi: int | None = None
-    per_ms: int | None = None
+    files = part_files(path)
+    units = set()
     for f in files:
-        pf = pq.ParquetFile(f)
         try:
-            typ = pf.schema_arrow.field("ts").type
-            unit_ns = {"s": 10**9, "ms": 10**6, "us": 10**3, "ns": 1}[
-                typ.unit
-            ]
+            units.add(pq.ParquetFile(f).schema_arrow.field("ts").type.unit)
         except (KeyError, AttributeError):
             return None
-        p = 1_000_000 // unit_ns  # ticks per millisecond
-        if per_ms is None:
-            per_ms = p
-        elif per_ms != p:
-            return None
-        md = pf.metadata
-        try:
-            idx = md.schema.names.index("ts")
-        except ValueError:
-            return None
-        for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(idx).statistics
-            if st is None or not st.has_min_max or not st.has_null_count:
-                return None
-            if st.null_count != 0:
-                return None
-            mn, mx = st.min_raw, st.max_raw  # physical INT64 ticks
-            if not isinstance(mn, int) or not isinstance(mx, int):
-                return None
-            lo = mn if lo is None else min(lo, mn)
-            hi = mx if hi is None else max(hi, mx)
-    if lo is None or hi is None or not per_ms:
+    stats = row_group_stats(files, "ts")
+    if len(units) != 1 or not stats:
         return None
-    return lo, hi, per_ms
+    per_ms = _TICKS_PER_MS.get(units.pop())
+    if per_ms is None or any(
+        not st.has_null_count or st.null_count != 0 for st in stats
+    ):
+        return None
+    lo = [st.min_raw for st in stats]  # physical INT64 ticks
+    hi = [st.max_raw for st in stats]
+    if not all(isinstance(v, int) for v in lo + hi):
+        return None
+    return min(lo), max(hi), per_ms
 
 
 _KEY_HIST_MEMO: dict[tuple, tuple] = {}
@@ -301,46 +243,32 @@ def _mod4_hist(sf_dir: str) -> tuple[list[int], int] | None:
     derivation). Returns ``(counts, n_null)`` where ``counts[res + 3]``
     is the rowcount of residue ``res`` in -3..3, or None when the column
     read surprises (caller falls back to a Spark aggregate). Memoized
-    per (path, size, mtime): planning metadata of the INPUT file, not a
-    result cache; when the stat itself fails the computed histogram is
-    returned WITHOUT memoizing (a later rewrite of the file must not be
-    served a stale histogram). The key is
-    :func:`~market_microstructure_toolkit_spark.sources.events.events_identity`,
-    shared with the book-plan memo of ``plans/book.py``.
+    per :func:`identity` of ``events.parquet``: planning metadata of the
+    INPUT file, not a result cache; when the stat itself fails the
+    computed histogram is returned WITHOUT memoizing (a later rewrite of
+    the file must not be served a stale histogram). The book-plan memo
+    of ``plans/book.py`` keys on the same identity.
 
-    SIZE-DISPATCHED (round 14, r13 verdict #1): under the driver-pull
-    gate the histogram is one in-process pyarrow column decode; above
-    it (the 100 TB case) the SAME exact numbers come from one
-    distributed Spark aggregate over the raw file — 8 groups collected,
-    never the column — memoized identically, so the ~40 dispatch-hint
-    call sites pay the scan once per fixture per process."""
-    import os as _os
-
-    import pyarrow.parquet as pq
-
-    from market_microstructure_toolkit_spark.sources.events import (
-        events_identity,
-    )
-
+    SIZE-DISPATCHED: under the driver-pull gate the histogram is one
+    in-process :func:`parquet_column` decode; above it (the 100 TB case)
+    the SAME exact numbers come from one distributed Spark aggregate
+    over the raw file — 8 groups collected, never the column — memoized
+    identically, so the ~40 dispatch-hint call sites pay the scan once
+    per fixture per process."""
     path = f"{sf_dir}/events.parquet"
-    memo_key = events_identity(sf_dir)
+    memo_key = identity(path)
     if memo_key is not None:
         hit = _KEY_HIST_MEMO.get(memo_key)
         if hit is not None:
             return hit
     try:
-        import glob as _glob
-
-        files = (
-            sorted(_glob.glob(_os.path.join(path, "*.parquet")))
-            if _os.path.isdir(path)
-            else [path]
-        )
-        if _column_pull_fits(files, "user_id"):
+        try:
+            col = parquet_column(path, "user_id").combine_chunks()
+        except ValueError:  # over the pull gate, or unreadable by arrow
+            col = None
+        if col is not None:
             import numpy as np
 
-            t = pq.read_table(path, columns=["user_id"])
-            col = t.column("user_id").combine_chunks()
             n_null = col.null_count
             vals = col.drop_null().to_numpy(zero_copy_only=False).astype(
                 np.int64
@@ -480,68 +408,8 @@ def _tape_parts(spark, glob_path: str, hi: int, per_part: int = 50_000) -> str:
     ``spark.read.parquet(glob).count()`` spent a full scheduled job per
     replay gate on a number the footers already hold; ~12 gates paid it
     every bench run)."""
-    n = _glob_parquet_rows(glob_path)
+    n = parquet_rows(glob_path)
     return _stream_parts(n, per_part=per_part, lo=2, hi=hi)
-
-
-def _glob_parquet_rows(glob_path: str) -> int:
-    """Footer rowcount summed over every part file matched by a glob of
-    chunk DIRS (the replay-tape layout ``<base>/data/*/``) or plain
-    files. Metadata-only; no Spark job."""
-    import glob as _glob
-    import os as _os
-
-    import pyarrow.parquet as pq
-
-    pats = [
-        _os.path.join(glob_path, "*.parquet"),
-        glob_path if glob_path.endswith(".parquet") else None,
-    ]
-    files: list[str] = []
-    for pat in pats:
-        if pat:
-            files.extend(_glob.glob(pat))
-    return sum(pq.ParquetFile(f).metadata.num_rows for f in sorted(set(files)))
-
-
-def _glob_parquet_col_range(
-    glob_path: str, col: str
-) -> tuple[int, int] | None:
-    """(min, max) of an INT64 column over every part file matched by a
-    chunk-dir glob, read from the parquet ROW-GROUP STATISTICS — a pure
-    metadata pull, no Spark job. Returns None (caller falls back to a
-    Spark aggregate) when any row group lacks exact min/max stats or the
-    column is absent. Integer statistics are exact (no string truncation
-    caveat), so on success this equals ``agg(min(col), max(col))``."""
-    import glob as _glob
-    import os as _os
-
-    import pyarrow.parquet as pq
-
-    files = sorted(_glob.glob(_os.path.join(glob_path, "*.parquet")))
-    if not files:
-        return None
-    lo: int | None = None
-    hi: int | None = None
-    for f in files:
-        md = pq.ParquetFile(f).metadata
-        try:
-            idx = md.schema.names.index(col)
-        except ValueError:
-            return None
-        for rg in range(md.num_row_groups):
-            cmd = md.row_group(rg).column(idx)
-            st = cmd.statistics
-            if st is None or not st.has_min_max:
-                return None
-            mn, mx = st.min, st.max
-            if not isinstance(mn, int) or not isinstance(mx, int):
-                return None
-            lo = mn if lo is None else min(lo, mn)
-            hi = mx if hi is None else max(hi, mx)
-    if lo is None or hi is None:
-        return None
-    return lo, hi
 
 
 def _stream_parts(n_rows: int, per_part: int = 50_000, lo: int = 8, hi: int = 32) -> str:
@@ -697,14 +565,34 @@ def _stamp_batch_order(*dirs: str) -> None:
                 os.utime(os.path.join(root, fn), (ts, ts))
 
 
-_TAPE_MEMO: dict[tuple[str, str], str] = {}
+_TAPE_MEMO: dict[tuple, str] = {}
 
 
-def _tape_cache_key(sf_dir: str, kind: str) -> str:
+def _tape_inputs(sf_dir: str) -> tuple:
+    """What a replay tape's rows depend on besides the code: the
+    :func:`identity` of every parquet input under ``sf_dir`` (so
+    regenerating fixtures under the SAME path invalidates the tape) and
+    the ``SPARK_GRAFT_PLANTS`` toggle."""
+    import os
+
+    from market_microstructure_toolkit_spark.plans.book import _plants_on
+
+    sfp = os.path.abspath(sf_dir)
+    try:
+        names = sorted(n for n in os.listdir(sfp) if n.endswith(".parquet"))
+    except OSError:
+        names = []
+    return (
+        tuple(identity(os.path.join(sfp, n)) for n in names),
+        _plants_on(),
+    )
+
+
+def _tape_cache_key(sf_dir: str, kind: str, inputs: tuple) -> str:
     """Content key for the cross-process tape cache: (sf_dir, kind,
-    plants toggle, hash of the derivation source files). Hashing the
-    source files makes any fixture-derivation change invalidate every
-    cached tape — coarser than a true content hash, but safe by
+    :func:`_tape_inputs`, hash of the derivation source files). Hashing
+    the source files makes any fixture-derivation change invalidate
+    every cached tape — coarser than a true content hash, but safe by
     construction, and the win this cache targets (repeated cold benches
     in one session, where ~10s of the cold streaming subtotal was
     re-building identical tapes per process) only needs stability
@@ -713,21 +601,7 @@ def _tape_cache_key(sf_dir: str, kind: str) -> str:
     import os
 
     h = hashlib.md5()
-    h.update(f"{os.path.abspath(sf_dir)}|{kind}|".encode())
-    # fixture identity (size+mtime of every parquet in the sf dir):
-    # regenerating fixtures under the SAME path must invalidate cached
-    # tapes (round-8 advice — the path alone served stale tapes)
-    sfp = os.path.abspath(sf_dir)
-    try:
-        for fn in sorted(os.listdir(sfp)):
-            if fn.endswith(".parquet"):
-                st = os.stat(os.path.join(sfp, fn))
-                h.update(f"{fn}:{st.st_size}:{st.st_mtime_ns}|".encode())
-    except OSError:
-        h.update(b"nodir")
-    from market_microstructure_toolkit_spark.plans.book import _plants_on
-
-    h.update(b"plants" if _plants_on() else b"noplants")
+    h.update(f"{os.path.abspath(sf_dir)}|{kind}|{inputs!r}|".encode())
     # hash EVERY package source file, not just the known derivation
     # modules: tape-build closures live in the gate modules (e.g.
     # streaming_queries' injected-duplicate tape), and missing one
@@ -752,17 +626,20 @@ def _memo_tape(sf_dir: str, kind: str, build) -> str:
     """Memoized replay tape: ``build(base)`` writes the micro-batch
     chunk dirs under ``base`` and returns them in batch order (they get
     mtime-stamped here). Tapes are pure functions of (sf_dir, kind,
-    derivation code), so they are cached at TWO levels: in-process
-    (dict) and CROSS-process under a shared scratch dir keyed by
-    content (round-8 verdict #6 — fresh cold-bench processes were
-    rebuilding identical tapes, ~10s of the cold streaming subtotal).
-    Builds land in a temp dir and publish with one atomic rename, so a
-    half-built tape is never visible. Checkpoints must stay PER-RUN (a
-    reused checkpoint replays committed offsets and emits nothing)."""
+    :func:`_tape_inputs`, derivation code), so they are cached at TWO
+    levels: in-process (dict) and CROSS-process under a shared scratch
+    dir keyed by content (fresh cold-bench processes were rebuilding
+    identical tapes, ~10s of the cold streaming subtotal). Both levels
+    key on the inputs, so a rewritten fixture or a flipped plants toggle
+    builds afresh in the same process too. Builds land in a temp dir and
+    publish with one atomic rename, so a half-built tape is never
+    visible. Checkpoints must stay PER-RUN (a reused checkpoint replays
+    committed offsets and emits nothing)."""
     import os
     import tempfile
 
-    key = (sf_dir, kind)
+    inputs = _tape_inputs(sf_dir)
+    key = (os.path.abspath(sf_dir), kind, inputs)
     hit = _TAPE_MEMO.get(key)
     if hit:
         # refresh mtime on EVERY hit (round-9 advice): a long-lived
@@ -787,7 +664,7 @@ def _memo_tape(sf_dir: str, kind: str, build) -> str:
     if st.st_uid != os.getuid():
         # someone else owns the path — refuse it, use a private dir
         root = tempfile.mkdtemp(prefix="mmt_tape_cache_")
-    final = os.path.join(root, _tape_cache_key(sf_dir, kind))
+    final = os.path.join(root, _tape_cache_key(sf_dir, kind, inputs))
     if os.path.isdir(root) and os.stat(root).st_uid == os.getuid():
         os.chmod(root, 0o700)
         # touch OUR entry before scanning (round-9 advice: refresh-then-

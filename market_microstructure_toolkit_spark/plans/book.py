@@ -86,10 +86,10 @@ def synthetic_book(spark: SparkSession, sf_dir: str, depth: int = BOOK_DEPTH) ->
     ``SPARK_GRAFT_PLANTS`` builds afresh. The session's required confs
     are applied on every call, hit or miss."""
     from market_microstructure_toolkit_spark.session import ensure_session_confs
-    from market_microstructure_toolkit_spark.sources.events import events_identity
+    from market_microstructure_toolkit_spark.sources.parquet_meta import identity
 
     ensure_session_confs(spark)
-    ident = events_identity(sf_dir)
+    ident = identity(f"{sf_dir}/events.parquet")
     if ident is None:
         return _build_book(spark, sf_dir, depth)
     key = (spark, ident, depth, _plants_on())

@@ -31,6 +31,7 @@ from market_microstructure_toolkit_spark.plans.base import (
     _tape_parts,
     _tape2,
     _events_fx,
+    parquet_col_range,
     parquet_rows,
     plant_docs,
     register_planted as register,
@@ -45,7 +46,6 @@ def q_streaming_ofi_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     instrument, carried across the batch boundary), availableNow trigger,
     memory sink. Hash-matching the batch oracle proves batch/stream
     parity (SURVEY §2.9)."""
-    import time
     import uuid
 
     from market_microstructure_toolkit_spark.plans.book import BOOK_DEPTH
@@ -107,7 +107,6 @@ def q_streaming_windowed_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact in ANY state-merge order (exact to ~85M rows/window) — a raw
     double AVG rounded 6dp sat one ulp from a rounding boundary and
     flipped when the tape's row order changed."""
-    import time
     import uuid
 
     from market_microstructure_toolkit_spark.plans.book import BOOK_DEPTH
@@ -184,7 +183,6 @@ def q_streaming_alert_join_replay(spark: SparkSession, sf_dir: str) -> DataFrame
     state). The wide watermark keeps state alive for the whole bounded
     replay; a live deployment would tighten it to the real lateness
     bound, trading state size for completeness."""
-    import time
     import uuid
 
     ev = _events_fx(spark, sf_dir)
@@ -275,7 +273,6 @@ def q_streaming_sessionize_replay(spark: SparkSession, sf_dir: str) -> DataFrame
     lands exactly on the gap, so the two definitions coincide here.
     session_window.end = last event + gap, so the emitted end subtracts
     the gap back to the last event's timestamp."""
-    import time
 
     ev = _events_fx(spark, sf_dir)
     tape_base = _memo_tape(
@@ -351,7 +348,6 @@ def q_streaming_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     suppression state carries across the batch boundary (a duplicate
     whose copies land in different micro-batches emits exactly once,
     with the first batch's min id)."""
-    import time
     import uuid
 
     from market_microstructure_toolkit_spark.streaming.corpus_stream import (
@@ -398,7 +394,6 @@ def q_streaming_trade_signs_replay(spark: SparkSession, sf_dir: str) -> DataFram
     scalars of per-instrument state — carries across the micro-batch
     boundary: a midpoint print whose deciding tick happened in the
     PREVIOUS batch still classifies correctly."""
-    import time
     import uuid
 
     from market_microstructure_toolkit_spark.streaming.trade_stream import (
@@ -448,7 +443,6 @@ def q_streaming_vpin_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     applyInPandasWithState stages re-shuffles on the same instrument
     keys — two O(instruments) state stores, no extra data movement
     pattern beyond the second keyed exchange."""
-    import time
     import uuid
 
     from market_microstructure_toolkit_spark.streaming.trade_stream import (
@@ -571,11 +565,7 @@ def q_streaming_vpin_skewed_replay(
             # exact for INT64; round 13) — the former Spark min/max agg
             # was a full scheduled job per invocation on a tape whose
             # footers already carry the answer. Fallback: stats absent.
-            from market_microstructure_toolkit_spark.plans.base import (
-                _glob_parquet_col_range,
-            )
-
-            rng = _glob_parquet_col_range(f"{tape_base}/data/*/", "ts_ms")
+            rng = parquet_col_range(f"{tape_base}/data/*/", "ts_ms")
             if rng is None:
                 lo, hi = (
                     spark.read.parquet(f"{tape_base}/data/*/")
@@ -717,7 +707,6 @@ def q_streaming_cdc_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     winners. Hash-matching the BATCH oracle proves upsert/delete state
     carries across the micro-batch boundary — the live ingestion twin
     of the one-shot merge."""
-    import time
     import uuid
 
     from market_microstructure_toolkit_spark.streaming.corpus_stream import (
@@ -860,7 +849,6 @@ def q_streaming_late_data_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     final watermark emitted. The oracle replicates all three measured
     rules relationally — the contract a billing or surveillance
     pipeline on this engine depends on."""
-    import time
     import uuid
 
     def build(bdir: str) -> list[str]:

@@ -35,14 +35,11 @@ by whole-stage codegen — no extra pass, no shuffle.
 
 from __future__ import annotations
 
-import os
-import stat
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
-__all__ = ["read_events", "normalize_ts_nanos", "events_identity"]
+__all__ = ["read_events", "normalize_ts_nanos"]
 
 
 def normalize_ts_nanos(df: DataFrame, col: str = "ts") -> DataFrame:
@@ -68,23 +65,3 @@ def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ensure_session_confs(spark)
     return normalize_ts_nanos(spark.read.parquet(f"{sf_dir}/events.parquet"))
-
-
-def events_identity(sf_dir: str) -> tuple | None:
-    """Identity of ``events.parquet`` under ``sf_dir``: its absolute path,
-    size and ``mtime_ns``, plus the same three of every entry when it is
-    a directory of part files. Any rewrite of the input changes it, so
-    planning metadata memoized under it (the key histogram, the book
-    plan) is never served for a different file. None when the stat
-    fails: the caller computes afresh and memoizes nothing."""
-    path = os.path.abspath(f"{sf_dir}/events.parquet")
-    try:
-        st = os.stat(path)
-        ident = [path, st.st_size, st.st_mtime_ns]
-        if stat.S_ISDIR(st.st_mode):
-            for e in sorted(os.scandir(path), key=lambda e: e.name):
-                est = e.stat()
-                ident += [e.name, est.st_size, est.st_mtime_ns]
-    except OSError:
-        return None
-    return tuple(ident)

@@ -147,3 +147,46 @@ def test_hist_not_memoized_on_stat_failure(monkeypatch, sf_dir):
     out = B._mod4_hist(sf_dir)
     assert out is not None
     assert all(len(k) > 1 for k in B._KEY_HIST_MEMO)
+
+
+def test_column_pull_fits_limits_are_inclusive(monkeypatch, tmp_path):
+    """Over a directory of parts the gate sums rows and uncompressed
+    column bytes across every row group of every part, and an input
+    exactly at either limit still fits."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from market_microstructure_toolkit_spark.sources.parquet_meta import (
+        part_files,
+    )
+
+    d = tmp_path / "parts"
+    d.mkdir()
+    for k in range(3):
+        ids = [None if i % 4 == 3 else i for i in range(10 * k, 10 * k + 7)]
+        pq.write_table(
+            pa.table({"user_id": pa.array(ids, type=pa.int64())}),
+            d / f"part-{k}.parquet",
+            row_group_size=3,
+        )
+    files = part_files(str(d))
+    mds = [pq.ParquetFile(f).metadata for f in files]
+    rows = sum(md.num_rows for md in mds)
+    nbytes = sum(
+        md.row_group(rg).column(0).total_uncompressed_size
+        for md in mds
+        for rg in range(md.num_row_groups)
+    )
+    assert (len(files), rows) == (3, 21)
+    for max_rows, max_bytes, fits in (
+        (rows, nbytes, True),
+        (rows - 1, nbytes, False),
+        (rows, nbytes - 1, False),
+    ):
+        B = _gate_env(
+            monkeypatch,
+            SPARK_GRAFT_PULL_MAX_ROWS=str(max_rows),
+            SPARK_GRAFT_PULL_MAX_BYTES=str(max_bytes),
+        )
+        assert B._column_pull_fits(files, "user_id") is fits
+    assert B._column_pull_fits(files, "absent") is False
