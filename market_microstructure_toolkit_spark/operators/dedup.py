@@ -201,12 +201,12 @@ def minhash_lsh_candidates(
 
 #: corpus-relative doc-frequency guard: "boilerplate" means appearing in
 #: more than 1/AUTO_DF_DIVISOR of the corpus (0.02%), floored at 10 docs
-#: so tiny corpora keep the round-1 behavior. A FIXED cap saturates on a
+#: so tiny corpora keep a cap of 10. A FIXED cap saturates on a
 #: replicated corpus: at sf10 (500k docs, each sf0.1 text present as
 #: ~100 near-identical replicas) every true-dup fingerprint has df ~100
-#: > 10, so the old guard dropped ALL dup signal — dedup_winnow's output
-#: collapsed 547 pairs (sf1) -> 15 (sf10). Same bug family as the fixed
-#: LSH bucket space. The cap resolves to 10 at every SF <= sf1
+#: > 10, so a fixed guard drops ALL dup signal — dedup_winnow's output
+#: would collapse from 547 pairs (sf1) to 15 (sf10). Same bug family as
+#: a fixed LSH bucket space. The cap resolves to 10 at every SF <= sf1
 #: (<= 50k docs), so small-SF results are unchanged by construction.
 AUTO_DF_DIVISOR = 5000
 
@@ -306,12 +306,12 @@ def simhash16(text_col: str = "text") -> Column:
     """
     toks = tokens(text_col)
 
-    # md5 ONCE per token, bound via transform (round 14, guide §1.2 /
-    # §4): higher-order-function lambdas are interpreted
-    # (CodegenFallback) with NO common-subexpression elimination, so the
-    # former `h = F.md5(t)` referenced in each of the 16 bit terms
-    # recomputed the hash 16x per token. The hex array is materialized
-    # once; the fold touches only cheap substring compares.
+    # md5 ONCE per token, bound via transform: higher-order-function
+    # lambdas are interpreted (CodegenFallback) with NO
+    # common-subexpression elimination, so an `h = F.md5(t)` referenced
+    # in each of the 16 bit terms would recompute the hash 16x per
+    # token. The hex array is materialized once; the fold touches only
+    # cheap substring compares.
     hashes = F.transform(toks, lambda t: F.md5(t))
 
     # All 16 bit counters accumulate in ONE aggregate lambda (see
@@ -334,12 +334,13 @@ def simhash16(text_col: str = "text") -> Column:
     votes = F.aggregate(hashes, init, step)
 
     # Bind the votes struct to a lambda variable before the 16 per-bit
-    # reads (round 14, same single-element-transform trick as
+    # reads (the same single-element-transform trick as
     # word_shingles): subexpression elimination skips trees containing
     # lambda variables, so referencing the aggregate 16 times in the
-    # final projection re-ran the WHOLE fold per bit — 16 full passes
-    # over every token's hash. Measured on the sf0.1 corpus: 31.4 s ->
-    # 0.95 s warm for the full expression after both fixes (33x).
+    # final projection would re-run the WHOLE fold per bit — 16 full
+    # passes over every token's hash. Measured on the sf0.1 corpus:
+    # 31.4 s -> 0.95 s warm for the full expression with both bindings
+    # (33x).
     def fp_of(v: Column) -> Column:
         out = F.lit(0)
         for b in range(16):
@@ -451,9 +452,16 @@ def winnow_candidates(
 
 
 #: dispatch record of the most recent dedup_clusters call in this
-#: process: {"n_edges": int, "disk_mode": bool, "forced": "0"|"1"|None}
+#: process: {"n_edges": int, "disk_mode": bool}
 #: — read by the threshold-boundary tests and century diagnostics
 LAST_CC_DISPATCH: dict = {}
+
+#: edge count at or above which the per-round CC label checkpoints go to
+#: reliable disk-backed ``checkpoint()`` instead of ``localCheckpoint``
+CC_DISK_EDGES = 20_000_000
+
+#: mirrored edges per partition of the cached CC loop layout
+CC_EDGES_PER_PART = 50_000
 
 
 def _ensure_checkpoint_dir(spark) -> None:
@@ -508,40 +516,36 @@ def dedup_clusters(
     references the previous labels TWICE, so an untruncated plan tree
     doubles per round) — the standard Spark iterative-algorithm guard.
 
-    Checkpoint storage is SIZE-DISPATCHED (round-11 verdict #2): the
-    mirrored edge set persists ``MEMORY_AND_DISK`` (its one-time
-    materialization is the dispatch probe; evictable-with-spill, so
-    small edge sets stay memory-speed and century-scale sets overflow
-    to disk under execution pressure instead of pinning heap), and the
-    per-round label frames use in-memory ``localCheckpoint`` below
-    ``SPARK_GRAFT_CC_DISK_ROWS`` edges (default 20M) and reliable
-    disk-backed ``checkpoint()`` above it — at century scale the old
-    always-local path pinned >70 GB of edge+label blocks in storage
-    memory (non-evictable: localCheckpoint blocks cannot be recomputed).
-    ``SPARK_GRAFT_CC_DISK=1/0`` forces either mode; results are
-    hash-identical across modes (pinned in
-    ``tests/test_cc_disk_checkpoint.py``). Reliable checkpoint files
-    are reclaimed by the ContextCleaner — ``get_spark`` sets
-    ``spark.cleaner.referenceTracking.cleanCheckpoints=true`` at
-    session build (a foreign session without it strands one label set
-    per round on local disk for the app's lifetime).
+    Checkpoint storage is SIZE-DISPATCHED: the mirrored edge set
+    persists ``MEMORY_AND_DISK`` (its one-time materialization is the
+    dispatch probe; evictable-with-spill, so small edge sets stay
+    memory-speed and century-scale sets overflow to disk under execution
+    pressure instead of pinning heap), and the per-round label frames
+    use in-memory ``localCheckpoint`` below :data:`CC_DISK_EDGES` edges
+    and reliable disk-backed ``checkpoint()`` at or above it — at
+    century scale an always-local path pins >70 GB of edge+label blocks
+    in storage memory (non-evictable: localCheckpoint blocks cannot be
+    recomputed). Results are hash-identical across modes (pinned in
+    ``tests/test_cc_disk_checkpoint.py``). Reliable checkpoint files are
+    reclaimed by the ContextCleaner — ``get_spark`` sets
+    ``spark.cleaner.referenceTracking.cleanCheckpoints=true`` at session
+    build (a foreign session without it strands one label set per round
+    on local disk for the app's lifetime).
     """
-    import os
-
     from pyspark import StorageLevel
 
     spark = df.sparkSession
     # both directions from ONE evaluation of the (possibly expensive)
     # pair plan — a union of two selects over `pairs` would run the
     # candidate-generation join twice before the materialization
-    # MEMORY_AND_DISK, not DISK_ONLY (round-12 verdict #3): a plain
-    # persist is evictable-with-spill, so small edge sets stay at
-    # memory speed (the unconditional DISK_ONLY cost dedup_clusters
-    # 1.3x at sf0.1) while century-scale sets overflow to disk
-    # instead of pinning heap — the unified memory manager evicts
-    # cached blocks whenever execution needs the space. DISK_ONLY
-    # was only ever needed for the NON-evictable localCheckpoint
-    # label blocks, which the disk_mode dispatch below handles.
+    # MEMORY_AND_DISK, not DISK_ONLY: a plain persist is
+    # evictable-with-spill, so small edge sets stay at memory speed
+    # (an unconditional DISK_ONLY costs dedup_clusters 1.3x at sf0.1)
+    # while century-scale sets overflow to disk instead of pinning
+    # heap — the unified memory manager evicts cached blocks whenever
+    # execution needs the space. Only the NON-evictable
+    # localCheckpoint label blocks need keeping off heap, which the
+    # disk_mode dispatch below handles.
     raw_edges = (
         pairs.select(
             F.explode(
@@ -559,89 +563,69 @@ def dedup_clusters(
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     n_edges = raw_edges.count()  # materializes once; doubles as dispatch probe
-    # Loop layout (round 14, r13 verdict #4 / guide §2.4): the edge set
-    # is hash-partitioned AND sorted on the probe key ONCE, so every
-    # round's neighbor join reads the cached layout with partitioning
-    # and ordering intact — the per-round joins then move only the
-    # (much smaller) label set, never the edges. The partition count is
-    # SIZE-ADAPTIVE (~50k edges/partition, clamped to [4, session
-    # shuffle partitions]) so bench-scale loops don't schedule dozens
-    # of near-empty tasks per round while century-scale sets use the
-    # cluster's own sizing; SPARK_GRAFT_CC_PARTS/_CC_EDGES_PER_PART
-    # override for experiments. The unpartitioned parent cache exists
-    # only to (a) price the dispatch probe and (b) keep the expensive
-    # pair plan single-evaluation; it is dropped as soon as the
-    # partitioned layout has materialized in round 1.
-    per_part = int(os.environ.get("SPARK_GRAFT_CC_EDGES_PER_PART", "50000"))
+    # Loop layout: the edge set is hash-partitioned AND sorted on the
+    # probe key ONCE, so every round's neighbor join reads the cached
+    # layout with partitioning and ordering intact — the per-round joins
+    # then move only the (much smaller) label set, never the edges. The
+    # partition count is SIZE-ADAPTIVE (CC_EDGES_PER_PART edges per
+    # partition, clamped to [4, session shuffle partitions]) so
+    # bench-scale loops don't schedule dozens of near-empty tasks per
+    # round while century-scale sets use the cluster's own sizing. The
+    # unpartitioned parent cache exists only to (a) price the dispatch
+    # probe and (b) keep the expensive pair plan single-evaluation; it
+    # is dropped as soon as the partitioned layout has materialized in
+    # round 1.
     try:
         conf_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
     except ValueError:
         # a non-numeric setting (e.g. "auto" where the platform sizes
         # shuffles itself) caps the layout at one partition per core
         conf_parts = spark.sparkContext.defaultParallelism
-    n_parts = int(os.environ.get("SPARK_GRAFT_CC_PARTS", "0")) or max(
-        4, min(conf_parts, (n_edges + per_part - 1) // per_part)
-    )
+    per_part = CC_EDGES_PER_PART
+    n_parts = max(4, min(conf_parts, (n_edges + per_part - 1) // per_part))
     edges = (
         raw_edges.repartition(n_parts, "src")
         .sortWithinPartitions("src")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    force = os.environ.get("SPARK_GRAFT_CC_DISK", "").strip()
-    if force in ("0", "1"):
-        disk_mode = force == "1"
-    else:
-        disk_mode = n_edges >= int(
-            os.environ.get("SPARK_GRAFT_CC_DISK_ROWS", "20000000")
-        )
-    # observable dispatch record (round-12 verdict #7): boundary tests
-    # pin the DECISION itself, not just result parity, so a future
-    # threshold bump cannot silently flip a never-exercised path
+    disk_mode = n_edges >= CC_DISK_EDGES
+    # observable dispatch record: boundary tests pin the DECISION
+    # itself, not just result parity, so a future threshold bump cannot
+    # silently flip a never-exercised path
     LAST_CC_DISPATCH.clear()
-    LAST_CC_DISPATCH.update(
-        {
-            "n_edges": n_edges,
-            "disk_mode": disk_mode,
-            "forced": force if force in ("0", "1") else None,
-        }
-    )
+    LAST_CC_DISPATCH.update({"n_edges": n_edges, "disk_mode": disk_mode})
     if disk_mode:
         _ensure_checkpoint_dir(spark)
 
-    # TOUCHED-ONLY iteration (round 13, guide §1.2 "don't compute things
-    # you throw away"): only nodes with an incident edge can ever leave
-    # their identity label — an untouched node's neighbor min is NULL and
-    # its label-of-label is itself, so every original round recomputed
-    # (and checkpointed) an unchanged identity row per singleton. The
-    # loop runs over the edges' endpoint set, read straight off the
-    # persisted mirrored edges (dst ranges over BOTH pair sides) — no
-    # df semi-join: every call site generates pairs FROM df, so
-    # endpoints ⊆ df[id_col] by construction, and a hypothetical
-    # foreign endpoint would be dropped by the final df-keyed left join
-    # anyway. Singletons rejoin as identity labels in that final
-    # coalesce, which is part of the returned lazy plan, not an extra
-    # job.
+    # TOUCHED-ONLY iteration: only nodes with an incident edge can ever
+    # leave their identity label — an untouched node's neighbor min is
+    # NULL and its label-of-label is itself, so iterating over every
+    # node would recompute (and checkpoint) an unchanged identity row
+    # per singleton each round. The loop runs over the edges' endpoint
+    # set, read straight off the persisted mirrored edges (dst ranges
+    # over BOTH pair sides) — no df semi-join: every call site generates
+    # pairs FROM df, so endpoints ⊆ df[id_col] by construction, and a
+    # hypothetical foreign endpoint would be dropped by the final
+    # df-keyed left join anyway. Singletons rejoin as identity labels in
+    # that final coalesce, which is part of the returned lazy plan, not
+    # an extra job.
     labels = (
         edges.select(F.col("dst").alias("id"))
         .distinct()
         .withColumn("lab", F.col("id"))
     )
-    # Per-round join strategy (round 14, r13 verdict #4): the planner's
-    # default broadcasts the label set on EVERY round's three joins —
-    # ~6 separate broadcast-build jobs per round, pure driver/scheduling
-    # latency at bench scale and a per-round collect-to-driver of the
-    # whole label set at any scale. Hinting SHUFFLE_HASH instead makes
-    # each round ONE job: the edges side reads its cached
-    # hash-partitioned/sorted layout with no exchange, and only the
-    # label set (a fraction of the edge set) shuffles. In disk_mode
+    # Per-round join strategy: the planner's default broadcasts the
+    # label set on EVERY round's three joins — ~6 separate
+    # broadcast-build jobs per round, pure driver/scheduling latency at
+    # bench scale and a per-round collect-to-driver of the whole label
+    # set at any scale. Hinting SHUFFLE_HASH instead makes each round
+    # ONE job: the edges side reads its cached hash-partitioned/sorted
+    # layout with no exchange, and only the label set (a fraction of
+    # the edge set) shuffles. In disk_mode
     # (century-scale edge sets) the planner already picks non-broadcast
     # strategies and a per-partition hash build of a huge label set
     # could OOM where sort-merge spills — leave its choice alone there.
-    # SPARK_GRAFT_CC_JOIN=broadcast restores the old behavior for A/Bs.
-    hint_loop = (
-        os.environ.get("SPARK_GRAFT_CC_JOIN", "").strip() != "broadcast"
-        and not disk_mode
-    )
+    hint_loop = not disk_mode
 
     def _side(df: DataFrame) -> DataFrame:
         return df.hint("shuffle_hash") if hint_loop else df
@@ -697,13 +681,11 @@ def dedup_clusters(
                         ).alias("__chg"),
                     )
                 )
-            # convergence metric OBSERVED on the checkpoint job itself
-            # (round 13, guide §1.2): the former
-            # `new.filter(__chg).limit(1).count()` was a second
-            # scheduled job per round over the just-checkpointed data;
+            # convergence metric OBSERVED on the checkpoint job itself:
             # CollectMetrics rides the materializing action, so each
-            # round is now ONE job. Same short-circuit semantics —
-            # changed==0 is exact, not sampled.
+            # round is ONE job (a `new.filter(__chg).limit(1).count()`
+            # would schedule a second job per round over the
+            # just-checkpointed data). changed==0 is exact, not sampled.
             obs = Observation()
             new = new.observe(
                 obs, F.count(F.when(F.col("__chg"), 1)).alias("n_chg")

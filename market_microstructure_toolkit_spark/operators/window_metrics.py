@@ -18,8 +18,6 @@ partition.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
@@ -508,15 +506,13 @@ def with_narrow_window(df, id_cols, input_cols, builder):
     return df.join(F.broadcast(series), list(id_cols))
 
 
-def seg_threshold(default: int = 1_000_000) -> int:
-    """Per-key rowcount above which the series operators dispatch to
-    the segmented scale path instead of the plain per-key window
-    (``SPARK_GRAFT_SEG_THRESHOLD`` overrides). Below it, one key's
-    history fits comfortably in one task and the segmented machinery's
-    broadcast/rank bookkeeping would only add latency; above it, the
-    plain window serializes the key through a single core (and a
-    multi-year single-instrument tape eventually OOMs the sort)."""
-    return int(os.environ.get("SPARK_GRAFT_SEG_THRESHOLD", str(default)))
+#: Per-key rowcount above which the series operators dispatch to the
+#: segmented scale path instead of the plain per-key window. Below it,
+#: one key's history fits comfortably in one task and the segmented
+#: machinery's broadcast/rank bookkeeping would only add latency; above
+#: it, the plain window serializes the key through a single core (and a
+#: multi-year single-instrument tape eventually OOMs the sort).
+SEG_THRESHOLD_ROWS = 1_000_000
 
 
 def use_segmented(rows_per_key: int | None, df: DataFrame = None,
@@ -536,7 +532,7 @@ def use_segmented(rows_per_key: int | None, df: DataFrame = None,
             .first()
         )
         rows_per_key = row["m"] or 0
-    return rows_per_key > seg_threshold()
+    return rows_per_key > SEG_THRESHOLD_ROWS
 
 
 def _nullsafe_broadcast_join(left: DataFrame, right: DataFrame, cols: list) -> DataFrame:
@@ -634,53 +630,23 @@ def rolling_segmented(
     of the END of a key's series see NULL leads in both the plain and
     the segmented form (no halo exists past the last row).
     """
-    order = [order_col] if isinstance(order_col, str) else list(order_col)
-    seg_col = order[0]
-    bounds = df.groupBy(*keys).agg(
-        F.min(seg_col).alias("__lo"),
-        F.max(seg_col).alias("__hi"),
-        F.count(F.lit(1)).alias("__n"),
-    )
-    keyed = _nullsafe_broadcast_join(df, bounds, list(keys)).withColumn(
-        "__seg", _segment_expr(seg_col, n_segments)
-    )
-    w_seg = Window.partitionBy(*keys, "__seg").orderBy(*order)
-    ranked = keyed.withColumn("__rn", F.row_number().over(w_seg))
-    seg_counts = keyed.groupBy(*keys, "__seg").agg(
-        F.count(F.lit(1)).alias("__cnt")
-    )
-    w_off = (
-        Window.partitionBy(*keys)
-        .orderBy("__seg")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    seg_offsets = seg_counts.select(
-        *keys,
-        "__seg",
-        F.coalesce(F.sum("__cnt").over(w_off), F.lit(0)).alias("__segoff"),
-    )
-    pos = (
-        _nullsafe_broadcast_join(ranked, seg_offsets, [*keys, "__seg"])
-        .withColumn("__pos", F.col("__rn") + F.col("__segoff") - 1)
-        .drop("__seg", "__rn", "__segoff", "__lo", "__hi")
+    pos = add_position_segmented(
+        df, keys, order_col, pos_col="__pos", n_col="__rows",
+        n_segments=n_segments,
     )
     chunk_sz = F.greatest(
         F.lit(window).cast("long"),
         F.lit(lookahead).cast("long"),
-        F.ceil(F.col("__n") / F.lit(n_chunks)).cast("long"),
+        F.ceil(F.col("__rows") / F.lit(n_chunks)).cast("long"),
     )
     chunk = (F.col("__pos") / chunk_sz).cast("long")
-    last_chunk = ((F.col("__n") - 1) / chunk_sz).cast("long")
-    # One map-side EXPLODE instead of base ∪ halo ∪ halo_fwd unions
-    # (round 13, guide §1.2/§2.4): each union branch re-evaluated the
-    # whole segmented-rank pipeline above (per-segment row_number
-    # window + two broadcast joins) just to emit the same rows with a
-    # different (__chunk, __halo) tag. Per row the copies are decided
-    # by the same predicates the union branches used — a validity-
-    # flagged struct array filtered then exploded — so the surviving
-    # (row, __chunk, __halo) set is IDENTICAL and the rank pipeline
-    # runs exactly once. Union order never mattered: the downstream
-    # chunk windows re-partition and order by __pos.
+    last_chunk = ((F.col("__rows") - 1) / chunk_sz).cast("long")
+    # One map-side EXPLODE emits each row's (__chunk, __halo) copies:
+    # a validity-flagged struct array, filtered then exploded, so the
+    # segmented-rank pipeline above runs exactly once (a union of base
+    # and halo branches would re-evaluate it per branch). The
+    # downstream chunk windows re-partition and order by __pos, so the
+    # order of the copies is irrelevant.
     tail_cond = (
         (F.col("__pos") % chunk_sz >= chunk_sz - F.lit(window - 1))
         & (chunk < last_chunk)
@@ -711,7 +677,7 @@ def rolling_segmented(
         )
         .withColumn("__chunk", F.col("__c.c"))
         .withColumn("__halo", F.col("__c.h"))
-        .drop("__c", "__n")
+        .drop("__c", "__rows")
     )
     w_base = Window.partitionBy(*keys, "__chunk").orderBy("__pos")
     stages = agg_builder(w_base)
@@ -735,8 +701,8 @@ def add_position_segmented(
     n_segments: int = 256,
 ) -> DataFrame:
     """Global per-key 0-based position (and optionally the per-key row
-    count) WITHOUT a per-key window — the segmented-rank phase of
-    :func:`rolling_segmented`, standalone: range-segment the order
+    count) WITHOUT a per-key window — the segmented-rank phase that
+    :func:`rolling_segmented` runs first: range-segment the order
     domain, per-segment ``row_number`` (parallel per key), then add each
     segment's exclusive cumulative count from a config-sized
     per-segment aggregate. Identical to
@@ -786,8 +752,8 @@ def series_stages(
     order_col: str | list = "ts_ms",
     lookahead: int = 0,
 ) -> DataFrame:
-    """The ONE dispatch point for bounded-lookback series gates (round-9
-    window audit): ``stages_builder(w) -> dict | list[dict]`` of window
+    """The ONE dispatch point for bounded-lookback series gates:
+    ``stages_builder(w) -> dict | list[dict]`` of window
     expressions over the base (partition+order) spec ``w``, exactly as
     :func:`rolling_segmented` takes them. ``segmented=False`` applies the
     same staged expressions over the plain per-key window (one task per
@@ -972,20 +938,19 @@ def add_rolling_rv_reset_segmented(
     order_col: str | list = "ts_ms",
     n_chunks: int = 64,
 ) -> DataFrame:
-    """W6 reset-on-gap RV on the chunk+halo path (round-9 dispatch
-    audit). The plain form stacks an UNBOUNDED gap-group window under
-    the bounded frame — un-chunkable as written — but the gap grouping
-    is mathematically redundant: a frame of the last ``window`` ROWS
-    that contains ``window`` non-null returns cannot span a gap (any
-    gap row inside the frame is itself a null return), and when the
-    current gap run is shorter than ``window`` the global frame
-    necessarily includes the gap row, failing the same count gate. So
-    the reset variant IS the W5 gated form over the raw (ungrouped)
-    frame — two chained stages (ratio-log return, then gated frame),
-    total lookback 1 + (window-1) + 1. Value-identical (bit-exact for
-    quantized/exact-binary returns, same frame row set and order
-    otherwise) to :func:`add_rolling_rv_reset`; pinned by
-    tests/test_scale_paths dispatch-parity cases."""
+    """W6 reset-on-gap RV on the chunk+halo path. The plain form stacks
+    an UNBOUNDED gap-group window under the bounded frame — un-chunkable
+    as written — but the gap grouping is mathematically redundant: a
+    frame of the last ``window`` ROWS that contains ``window`` non-null
+    returns cannot span a gap (any gap row inside the frame is itself a
+    null return), and when the current gap run is shorter than
+    ``window`` the global frame necessarily includes the gap row,
+    failing the same count gate. So the reset variant IS the W5 gated
+    form over the raw (ungrouped) frame — two chained stages (ratio-log
+    return, then gated frame), total lookback 1 + (window-1) + 1.
+    Value-identical (bit-exact for quantized/exact-binary returns, same
+    frame row set and order otherwise) to :func:`add_rolling_rv_reset`;
+    pinned by tests/test_scale_paths dispatch-parity cases."""
 
     def build(w):
         p = F.col(price_col)

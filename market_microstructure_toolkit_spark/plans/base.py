@@ -1,8 +1,7 @@
 """Shared gate-registry infrastructure: the REGISTRY, the register
 decorator (required-conf wrapper), scratch/tape helpers for streaming
 replays, fixture loaders, and the SQL fragments shared across domains.
-Split out of the former plans/queries.py monolith (round-6 verdict #2);
-see plans/queries.py for the determinism rules every oracle follows.
+See plans/queries.py for the determinism rules every oracle follows.
 """
 
 from __future__ import annotations
@@ -74,9 +73,9 @@ def q2k_col(c, k: int):
     floor(x*2^k + 0.5)) BEFORE an order-sensitive sum/mean: sums of such
     binary fractions are exact in ANY accumulation order (while partial
     sums stay under 2^(53-k)), so AVG/SUM reductions stop being one-ulp-
-    from-a-ROUND-boundary time bombs (ADVICE r7: a raw ROUND(AVG(double),
-    6) survives rounds by luck until any partition/order change flips a
-    boundary value). Pick k so quantum << value scale and
+    from-a-ROUND-boundary time bombs (a raw ROUND(AVG(double), 6) holds
+    only by luck until a partition/order change flips a boundary
+    value). Pick k so quantum << value scale and
     n_rows * max|value| < 2^(53-k)."""
     s = float(2**k)
     return F.floor(c * F.lit(s) + F.lit(0.5)) / F.lit(s)
@@ -127,37 +126,29 @@ _glob_parquet_rows = parquet_rows
 _glob_parquet_col_range = parquet_col_range
 
 
-def _pull_limits() -> tuple[int, int]:
-    """(max_bytes, max_rows) ceiling for DRIVER-side column decodes —
-    the size gate every full-column pyarrow pull must pass (round 14,
-    r13 verdict #1: the round-13 pulls replaced distributed scans that
-    were slow-but-correct at scale with driver reads that are
-    fast-but-fatal at 100 TB — a 2 TB ts column concatenated in driver
-    memory is an OOM, not an optimization). Defaults: 128 MB of
-    uncompressed column bytes / 50M rows — comfortably above every
-    local fixture, far below driver-heap territory. Env-overridable so
-    tests can force the over-threshold path on a small file."""
-    import os as _os
-
-    return (
-        int(_os.environ.get("SPARK_GRAFT_PULL_MAX_BYTES", str(128 * 1024**2))),
-        int(_os.environ.get("SPARK_GRAFT_PULL_MAX_ROWS", str(50_000_000))),
-    )
+#: Ceiling for DRIVER-side column decodes — the size gate every
+#: full-column pyarrow pull must pass. A driver pull is fast where a
+#: distributed scan would schedule a job, but fatal at 100 TB (a 2 TB ts
+#: column concatenated in driver memory is an OOM, not an optimization).
+#: 128 MB of uncompressed column bytes / 50M rows sits comfortably above
+#: every local fixture and far below driver-heap territory.
+PULL_MAX_BYTES = 128 * 1024**2
+PULL_MAX_ROWS = 50_000_000
 
 
 def _column_pull_fits(files: list[str], col: str) -> bool:
     """Footer-metadata size gate for a driver-side decode of ``col``:
     True iff the column's total UNCOMPRESSED byte size and the total
-    rowcount sit under :func:`_pull_limits`. Reads only footers (free —
-    the same metadata the rowcount hints already read); False also when
-    the column is missing, so callers fall back to their Spark path."""
-    max_bytes, max_rows = _pull_limits()
+    rowcount sit at or under :data:`PULL_MAX_BYTES` /
+    :data:`PULL_MAX_ROWS`. Reads only footers (free — the same metadata
+    the rowcount hints already read); False also when the column is
+    missing, so callers fall back to their Spark path."""
     chunks = column_chunks(files, col)
     if chunks is None:
         return False
     rows = sum(n for n, _ in chunks)
     nbytes = sum(c.total_uncompressed_size for _, c in chunks)
-    return rows <= max_rows and nbytes <= max_bytes
+    return rows <= PULL_MAX_ROWS and nbytes <= PULL_MAX_BYTES
 
 
 def parquet_column(path: str, col: str):
@@ -172,10 +163,10 @@ def parquet_column(path: str, col: str):
     semantics differ from the raw file's.
 
     SIZE-GATED: raises ValueError when the column's footer-metadata
-    size exceeds :func:`_pull_limits` — every caller wraps this in
-    try/except with a distributed Spark fallback, so an over-threshold
-    input (the 100 TB case) takes the scale-safe aggregate instead of
-    concatenating terabytes in driver memory."""
+    size exceeds :data:`PULL_MAX_BYTES` / :data:`PULL_MAX_ROWS` — every
+    caller wraps this in try/except with a distributed Spark fallback,
+    so an over-threshold input (the 100 TB case) takes the scale-safe
+    aggregate instead of concatenating terabytes in driver memory."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -231,7 +222,7 @@ _KEY_HIST_MEMO: dict[tuple, tuple] = {}
 
 
 #: last _mod4_hist read failure (str), surfaced by book_rows_per_key's
-#: RuntimeError so a bad file diagnoses itself (r13 ADVICE)
+#: RuntimeError so a bad file diagnoses itself
 _MOD4_LAST_ERR: list = []
 
 
@@ -314,7 +305,7 @@ def _mod4_hist(sf_dir: str) -> tuple[list[int], int] | None:
 def book_symbol_rows(sf_dir: str, residue: int = 0) -> int | None:
     """Rowcount of the synthetic book filtered to one symbol
     (``symbol == f'S{residue}'``), from the arrow histogram instead of a
-    scheduled Spark count job (round 13, guide §1.2): the book derivation
+    scheduled Spark count job: the book derivation
     is one row per event and ``symbol = 'S' || user_id % 4``, so the
     filtered count IS the residue-class count. NULL user_id rows yield a
     NULL symbol and never match a literal filter. None on read surprise
@@ -330,7 +321,7 @@ def book_symbol_group_counts(
 ) -> dict[tuple[str, str | None], int] | None:
     """Per-(exchange_id, symbol) rowcounts of the FULL synthetic book —
     the grouped simulators' ``groupBy(keys).count()`` pull, from the
-    arrow histogram (round 13, guide §1.2). Matches the Spark collect
+    arrow histogram. Matches the Spark collect
     exactly: only groups present in the data appear; a NULL user_id
     yields a NULL symbol group ('S' || NULL is NULL). None on read
     surprise."""
@@ -357,32 +348,28 @@ def book_rows_per_key(sf_dir: str) -> int:
     """MAX per-(exchange, symbol) rowcount of the synthetic book — the
     dispatch hint every growth-class window gate reads.
 
-    Round-10 (round-9 verdict #1): the previous hint was footer rowcount
-    ÷ 4 — an AVERAGE, equal to the max only while the fixture's symbols
-    (``user_id % 4``) stay uniform by construction. Under real-world
-    skew (one hot symbol holding 90% of rows) the average stays under
-    ``seg_threshold`` while the hot key's window serializes on a single
-    task — exactly the 100×-robustness gap dispatch exists to close. The
-    hint now measures the ACTUAL key histogram: one column-pruned arrow
-    read of ``user_id`` (the only input to the symbol derivation),
-    bincounted mod 4, max taken; NULL user_id (its own window group)
-    counts as a fifth bucket. Cost: one narrow column scan per
-    (sf_dir, fixture mtime), memoized — ~10 ms at sf1 against Spark jobs
-    it gates that run seconds. On a production deployment the same
-    signal comes from catalog/ANALYZE per-key statistics or the measured
-    fallback (``use_segmented(None, df)``, which aggregates MAX per-key
-    count); the contract either way is max, never average.
-
-    Round 13: the histogram itself moved to :func:`_mod4_hist` (shared
-    with the simulators' rowcount hints); this keeps the same contract —
-    max class count, NULL user_id counting as a fifth bucket."""
+    It is a MAX, not footer rowcount ÷ 4: an AVERAGE equals the max
+    only while the fixture's symbols (``user_id % 4``) stay uniform by
+    construction. Under real-world skew (one hot symbol holding 90% of
+    rows) the average stays under ``W.SEG_THRESHOLD_ROWS`` while the hot
+    key's window serializes on a single task — exactly the
+    100×-robustness gap dispatch exists to close. The hint measures the
+    ACTUAL key histogram (:func:`_mod4_hist`, shared with the
+    simulators' rowcount hints): one column-pruned arrow read of
+    ``user_id`` (the only input to the symbol derivation), bincounted
+    mod 4, max taken; NULL user_id (its own window group) counts as a
+    fifth bucket. Cost: one narrow column scan per (sf_dir, fixture
+    identity), memoized — ~10 ms at sf1 against Spark jobs it gates that
+    run seconds. On a production deployment the same signal comes from
+    catalog/ANALYZE per-key statistics or the measured fallback
+    (``use_segmented(None, df)``, which aggregates MAX per-key count);
+    the contract either way is max, never average."""
     hist = _mod4_hist(sf_dir)
     if hist is None:
-        # read surprise: fall back to the footer-rowcount average's old
-        # behavior is WRONG under skew, so fail loudly instead — every
-        # caller treats this hint as required fixture metadata. The
-        # underlying pyarrow/IO error is surfaced here (r13 ADVICE: the
-        # bare except inside _mod4_hist used to discard it).
+        # read surprise: a footer-rowcount average is WRONG under skew,
+        # so fail loudly instead — every caller treats this hint as
+        # required fixture metadata. The underlying pyarrow/IO error
+        # that _mod4_hist recorded is surfaced here.
         detail = f" ({_MOD4_LAST_ERR[0]})" if _MOD4_LAST_ERR else ""
         raise RuntimeError(
             f"book_rows_per_key: cannot read {sf_dir}/events.parquet "
@@ -404,10 +391,9 @@ def _tape_parts(spark, glob_path: str, hi: int, per_part: int = 50_000) -> str:
     both).
 
     The rowcount is read from the parquet FOOTERS via pyarrow — a pure
-    metadata pull, no Spark job (round 13: the former
-    ``spark.read.parquet(glob).count()`` spent a full scheduled job per
-    replay gate on a number the footers already hold; ~12 gates paid it
-    every bench run)."""
+    metadata pull, no Spark job (``spark.read.parquet(glob).count()``
+    would spend a full scheduled job per replay gate on a number the
+    footers already hold)."""
     n = parquet_rows(glob_path)
     return _stream_parts(n, per_part=per_part, lo=2, hi=hi)
 
@@ -424,8 +410,13 @@ def _stream_parts(n_rows: int, per_part: int = 50_000, lo: int = 8, hi: int = 32
     return str(max(lo, min(hi, (n_rows + per_part - 1) // per_part)))
 
 
-def _scratch(prefix: str) -> str:
-    """Scratch dir for replay chunks / checkpoints / roundtrip files.
+#: age after which an untouched scratch or tape-cache directory is taken
+#: to belong to a dead session (or, for tapes, a previous code state)
+_STALE_S = 6 * 3600
+
+
+def _scratch_root() -> str:
+    """Root for replay scratch and the tape cache.
 
     Prefers the /dev/shm tmpfs when present: gate replays are ephemeral
     by construction, so the checkpoint's durability guarantee buys
@@ -436,37 +427,55 @@ def _scratch(prefix: str) -> str:
     the JVM heap for physical RAM via tmpfs.
     """
     import os
-    import shutil
     import tempfile
+
+    return os.environ.get("SPARK_GRAFT_SCRATCH_DIR") or (
+        "/dev/shm" if os.path.isdir("/dev/shm") else tempfile.gettempdir()
+    )
+
+
+def _sweep_stale(root: str, prefix: str = "", skip: str | None = None) -> None:
+    """Remove every directory directly under ``root`` whose name starts
+    with ``prefix`` but not with ``skip`` and whose mtime is older than
+    :data:`_STALE_S`. Best effort: entries that vanish or cannot be
+    read mid-scan are left alone."""
+    import os
+    import shutil
     import time
 
-    base = os.environ.get("SPARK_GRAFT_SCRATCH_DIR") or (
-        "/dev/shm" if os.path.isdir("/dev/shm") else None
-    )
-    # Opportunistic age eviction (round 13): scratch dirs cannot be
-    # removed when their gate returns — the returned DataFrame lazily
-    # reads the scratch parquet — so they leak until process exit and
-    # beyond (a measured 8 GB of dead mmt_* dirs from prior sessions
-    # sat on this box's tmpfs, shrinking the page cache every run
-    # after). Any sibling mmt_* dir untouched for >6h is from a dead
-    # session; sweep it here, the same cutoff the tape cache uses. The
-    # tape cache root (mmt_tape_cache_*) manages its own eviction and
-    # is skipped.
-    scan = base or tempfile.gettempdir()
-    cutoff = time.time() - 6 * 3600
+    cutoff = time.time() - _STALE_S
     try:
-        for ent in os.listdir(scan):
-            if not ent.startswith("mmt_") or ent.startswith("mmt_tape_cache_"):
-                continue
-            p = os.path.join(scan, ent)
-            try:
-                if os.path.isdir(p) and os.path.getmtime(p) < cutoff:
-                    shutil.rmtree(p, ignore_errors=True)
-            except OSError:
-                continue
+        names = os.listdir(root)
     except OSError:
-        pass
-    return tempfile.mkdtemp(prefix=prefix, dir=base)
+        return
+    for ent in names:
+        if not ent.startswith(prefix) or (skip and ent.startswith(skip)):
+            continue
+        p = os.path.join(root, ent)
+        try:
+            if os.path.isdir(p) and os.path.getmtime(p) < cutoff:
+                shutil.rmtree(p, ignore_errors=True)
+        except OSError:
+            continue
+
+
+def _scratch(prefix: str) -> str:
+    """Fresh scratch dir for replay chunks / checkpoints / roundtrip
+    files under :func:`_scratch_root`.
+
+    Scratch dirs cannot be removed when their gate returns — the
+    returned DataFrame lazily reads the scratch parquet — so they leak
+    until process exit and beyond (8 GB of dead mmt_* dirs from earlier
+    sessions were once measured on a tmpfs, shrinking the page cache for
+    every later run). Each call therefore sweeps stale sibling mmt_*
+    dirs; the tape cache root (mmt_tape_cache_*) manages its own
+    eviction and is skipped.
+    """
+    import tempfile
+
+    root = _scratch_root()
+    _sweep_stale(root, prefix="mmt_", skip="mmt_tape_cache_")
+    return tempfile.mkdtemp(prefix=prefix, dir=root)
 
 
 #: per-batch progress of the most recent replay_to_parquet run in this
@@ -486,7 +495,7 @@ def await_replay(q, name: str, await_s: int = 300) -> None:
     ``SPARK_GRAFT_REPLAY_AWAIT_S`` RAISES the ceiling for century-scale
     tapes without weakening the default — it is a floor, never a
     reduction, so a call site that passes a larger per-site ceiling
-    keeps it (round-10 ADVICE #4)."""
+    keeps it."""
     import contextlib
     import os as _os
 
@@ -496,7 +505,7 @@ def await_replay(q, name: str, await_s: int = 300) -> None:
     if not q.awaitTermination(await_s):
         # best-effort stop: if the stuck query's thread errors inside
         # stop(), the informative TimeoutError below must still
-        # propagate (round-10 ADVICE #3)
+        # propagate
         with contextlib.suppress(Exception):
             q.stop()
         raise TimeoutError(
@@ -511,9 +520,9 @@ def replay_to_parquet(spark, df, base: str, name: str, await_s: int = 300):
     replays whose output is INPUT-sized (per-trade signs, per-event OFI,
     per-doc dedup/CDC emissions). The memory sink materializes every
     emitted row in the DRIVER heap: fine at sf0.1, an 8 GB driver OOM
-    at the sf10 decade probe (10M-row tapes) — the round-9 decade's bug
-    class. The parquet sink lands rows executor-side (append mode,
-    which every per-row stateful op here uses); downstream aggregation
+    at the sf10 decade probe (10M-row tapes). The parquet sink lands
+    rows executor-side (append mode, which every per-row stateful op
+    here uses); downstream aggregation
     then reads a columnar scan via the sink's transaction log instead
     of a driver-resident table. Memory sinks remain correct — and are
     kept — for complete-mode or output-bounded replays (windowed
@@ -525,12 +534,12 @@ def replay_to_parquet(spark, df, base: str, name: str, await_s: int = 300):
         .trigger(availableNow=True)
         .start()
     )
-    # loud-timeout contract shared with every replay await site
-    # (round-9 advice; see await_replay)
+    # loud-timeout contract shared with every replay await site (see
+    # await_replay)
     await_replay(q, f"replay_to_parquet[{name}]", await_s)
     # expose the finished replay's per-batch progress for the scale
-    # decomposition tools (batch count vs per-batch state throughput —
-    # round-9 verdict #3); recentProgress caps at ~100 entries, enough
+    # decomposition tools (batch count vs per-batch state
+    # throughput); recentProgress caps at ~100 entries, enough
     # for every tape here, and the copy is metadata-sized
     import json as _json
 
@@ -642,23 +651,19 @@ def _memo_tape(sf_dir: str, kind: str, build) -> str:
     key = (os.path.abspath(sf_dir), kind, inputs)
     hit = _TAPE_MEMO.get(key)
     if hit:
-        # refresh mtime on EVERY hit (round-9 advice): a long-lived
-        # process replaying from an in-memory-memoized tape would
-        # otherwise never touch it, letting another process's eviction
-        # scan rmtree it mid-read once it aged past the cutoff
+        # refresh mtime on EVERY hit: a long-lived process replaying
+        # from an in-memory-memoized tape would otherwise never touch
+        # it, letting another process's eviction scan rmtree it
+        # mid-read once it aged past the cutoff
         try:
             os.utime(hit)
         except OSError:
             pass
         return hit
-    # per-user, 0700 cache root (round-8 advice): a predictable path
-    # under a world-writable parent must not let another uid pre-create
-    # or poison tapes that feed correctness gates
-    root = os.path.join(
-        os.environ.get("SPARK_GRAFT_SCRATCH_DIR")
-        or ("/dev/shm" if os.path.isdir("/dev/shm") else tempfile.gettempdir()),
-        f"mmt_tape_cache_u{os.getuid()}",
-    )
+    # per-user, 0700 cache root: a predictable path under a
+    # world-writable parent must not let another uid pre-create or
+    # poison tapes that feed correctness gates
+    root = os.path.join(_scratch_root(), f"mmt_tape_cache_u{os.getuid()}")
     os.makedirs(root, mode=0o700, exist_ok=True)
     st = os.stat(root)
     if st.st_uid != os.getuid():
@@ -667,26 +672,15 @@ def _memo_tape(sf_dir: str, kind: str, build) -> str:
     final = os.path.join(root, _tape_cache_key(sf_dir, kind, inputs))
     if os.path.isdir(root) and os.stat(root).st_uid == os.getuid():
         os.chmod(root, 0o700)
-        # touch OUR entry before scanning (round-9 advice: refresh-then-
-        # evict ordering closes the window where this process's target
-        # looks stale to its own scan), then age-evict: any entry
-        # untouched for >6h is from a previous code state (the source-
-        # hash key changes per edit) and will never hit again
+        # touch OUR entry before scanning, so this process's target
+        # never looks stale to its own scan, then age-evict: an entry
+        # untouched for that long is from a previous code state (the
+        # source-hash key changes per edit) and will never hit again
         try:
             os.utime(final)
         except OSError:
             pass
-        import shutil as _sh
-        import time as _time
-
-        cutoff = _time.time() - 6 * 3600
-        try:
-            for ent in os.listdir(root):
-                p = os.path.join(root, ent)
-                if os.path.isdir(p) and os.path.getmtime(p) < cutoff:
-                    _sh.rmtree(p, ignore_errors=True)
-        except OSError:
-            pass
+        _sweep_stale(root)
     if not os.path.isdir(final):
         base = _scratch(prefix=f"mmt_tape_{kind}_")
         _stamp_batch_order(*build(base))
@@ -762,7 +756,7 @@ def _tape2(spark: SparkSession, sf_dir: str, kind: str) -> str:
 
 
 # ---------------------------------------------------------------------------
-# F7 guard-branch plants (round-8 verdict #4): rare pathological rows in the
+# F7 guard-branch plants: rare pathological rows in the
 # events/documents fixtures, mirroring the F6 book plants — so the corpus/
 # events/streaming gate hashes pin the degenerate-input guard branches, not
 # just the happy path. Independent predicates on large primes; identical
@@ -876,13 +870,12 @@ def plants_rewrite_sql(sql: str | None, name: str = "") -> str | None:
     market_queries where this rewrite is not applied (the book carries
     its own F6 plants).
 
-    Round-9 (round-8 advice): the rename is constrained to table
-    positions (``FROM``/``JOIN`` keyword prefix) instead of every
-    word-boundary occurrence, and any RESIDUAL bare table reference
-    left outside the book CTE and outside ``--`` comments raises at
-    registration time — a column alias, string literal, or other
-    non-table use of the word would otherwise be silently renamed (or
-    silently left reading unplanted data)."""
+    The rename is constrained to table positions (``FROM``/``JOIN``
+    keyword prefix) instead of every word-boundary occurrence, and any
+    RESIDUAL bare table reference left outside the book CTE and outside
+    ``--`` comments raises at registration time — a column alias, string
+    literal, or other non-table use of the word would otherwise be
+    silently renamed (or silently left reading unplanted data)."""
     import re
 
     from market_microstructure_toolkit_spark.plans.book import _plants_on
@@ -914,8 +907,8 @@ def plants_rewrite_sql(sql: str | None, name: str = "") -> str | None:
             ctes.append(f"{tbl}_planted AS ({planted})")
         residual = re.sub(r"--[^\n]*", "", out.replace(book, ""))
         # IGNORECASE so the guard's sensitivity matches the rewrite's
-        # (round-9 advice: an uppercase 'EVENTS' in a comma-join or
-        # other non-FROM/JOIN position escaped the raise otherwise)
+        # (an uppercase 'EVENTS' in a comma-join or other non-FROM/JOIN
+        # position would escape the raise otherwise)
         if re.search(rf"\b{tbl}\b", residual, flags=re.IGNORECASE):
             raise ValueError(
                 f"plants_rewrite_sql[{name}]: bare '{tbl}' reference in a "
@@ -974,9 +967,9 @@ def lsh_keyed_sql(n_bands: int = 4) -> str:
     bucket) CTE bodies. Bit term i>=8 is gated on ``nb.bits > i`` so one
     static SQL text reproduces every width the operator can choose.
 
-    Round-9 decade fix: the previous static 4x8-bit SQL (1024 buckets
-    forever) made candidate pairs quadratic in corpus size — 312M pairs
-    at sf10 — in BOTH engines; band resolution must grow with the data.
+    Band resolution must grow with the data: a static 4x8-bit SQL (1024
+    buckets forever) makes candidate pairs quadratic in corpus size —
+    312M pairs at sf10 — in BOTH engines.
     """
     from market_microstructure_toolkit_spark.operators.similarity import (
         AUTO_TARGET_OCC,
@@ -1040,11 +1033,11 @@ FROM lagged
 _TRADES_CTE = f"{_BOOK_CTE},\ntrades AS ({trades_sql()})"
 
 
-#: hot-symbol remap for the skewed streaming tape (round-9 verdict #6):
-#: 90% of prints collapse onto S0, a pure per-row function of raw_nonce
-#: applied identically on both engines. Keyed state then sees one key
-#: holding ~90% of the stream — the shape that tests whether the state
-#: shuffle serializes.
+#: hot-symbol remap for the skewed streaming tape: 90% of prints
+#: collapse onto S0, a pure per-row function of raw_nonce applied
+#: identically on both engines. Keyed state then sees one key holding
+#: ~90% of the stream — the shape that tests whether the state shuffle
+#: serializes.
 _SKEW_SYMBOL_CASE = "CASE WHEN raw_nonce % 10 <> 0 THEN 'S0' ELSE symbol END"
 
 

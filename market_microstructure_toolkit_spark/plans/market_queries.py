@@ -192,8 +192,8 @@ FROM ofi
 @register("book_ofi_lobster_cum", _OFI_LOBSTER_SQL)
 def q_book_ofi_lobster_cum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LOBSTER-style OFI + running cumulative (W3+W7, plot_cli.py:145-162),
-    SIZE-DISPATCHED (round-8 verdict #2): below ``seg_threshold()`` rows
-    per key, the plain lag + unbounded-frame running sum; above it, the
+    SIZE-DISPATCHED: below ``W.SEG_THRESHOLD_ROWS`` rows per key, the
+    plain lag + unbounded-frame running sum; above it, the
     OFI lag runs on the chunk+halo path (lookback 1 -> window=2) and the
     running total on the segmented prefix-sum
     (``add_cumulative_segmented``). Sizes are exact binary fractions
@@ -302,8 +302,8 @@ def _rv_surface(
 
 @register("book_returns_rv", _RV_SQL)
 def q_book_returns_rv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """W4/W5 (metrics.py:172-193), SIZE-DISPATCHED (round-8 verdict #2):
-    below ``seg_threshold()`` rows per key the plain per-key window
+    """W4/W5 (metrics.py:172-193), SIZE-DISPATCHED: below
+    ``W.SEG_THRESHOLD_ROWS`` rows per key the plain per-key window
     runs (small series, zero bookkeeping); above it the identical
     surface computes on the chunk+halo segmented path — chosen from the
     events parquet footer rowcount (a metadata pull, no extra job).
@@ -493,8 +493,8 @@ def q_book_rv_reset(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum/count runs inside (keys, gap_grp) so frames never span a gap.
     Gaps injected every 37th event; returns quantized (exact sums).
 
-    SIZE-DISPATCHED (round-9 window audit): above ``seg_threshold()``
-    rows per key the gap grouping — an UNBOUNDED running window — is
+    SIZE-DISPATCHED: above ``W.SEG_THRESHOLD_ROWS`` rows per key the
+    gap grouping — an UNBOUNDED running window — is
     replaced by its chunk+halo equivalent: a 20-row frame holding 20
     non-null returns cannot span a gap (a gap row in the frame is
     itself a null return), so the gated RAW frame computes the same
@@ -655,8 +655,8 @@ def _corr_surface(
 
 @register("book_rolling_corr", _ROLL_CORR_SQL)
 def q_book_rolling_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """W10 (advanced_plots.py:169), SIZE-DISPATCHED (round-8 verdict
-    #2): plain per-key window below ``seg_threshold()`` rows per key
+    """W10 (advanced_plots.py:169), SIZE-DISPATCHED: plain per-key
+    window below ``W.SEG_THRESHOLD_ROWS`` rows per key
     (from the events footer rowcount — a metadata pull), chunk+halo
     segmented path above it. ``book_corr_segmented`` pins the segmented
     branch explicitly; both branches share this oracle."""
@@ -5032,12 +5032,12 @@ def q_book_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
         ts_col="ts_ms",
         value_cols=("mid",),
         target_ts_col="grid_ts",
-        # measured (r9 threshold probe): THIS union's carry is so narrow
+        # measured: THIS union's carry is so narrow
         # (one double) that the plain 4-task window beats the segmented
         # machinery 8x at 2.5M rows/key (1.1s vs 8.6s at sf10), unlike
         # the sibling as-of gates where segmented wins 1.7-2.3x at the
         # same size — dispatch at 4x the default threshold instead
-        segmented=book_rows_per_key(sf_dir) > 4 * W.seg_threshold(),
+        segmented=book_rows_per_key(sf_dir) > 4 * W.SEG_THRESHOLD_ROWS,
     )
     # picked carries the probe time as ts_ms (the union's ts_col) and the
     # matched snapshot's timestamp as src_ts_ms

@@ -86,8 +86,8 @@ SELECT exchange_id, symbol,
        -- mids quantized to 2^-20 BEFORE the mean: the sum of quantized
        -- summands is exact in any accumulation order (state-merge order
        -- in the streaming tier is not the scan order), then one
-       -- division; a raw AVG rounded 6dp flipped a boundary case when
-       -- the tape's row order changed (round-7 spread() change)
+       -- division; a raw AVG rounded 6dp can flip a boundary case when
+       -- the tape's row order changes
        ROUND(AVG(floor((best_bid + best_ask) / 2.0 * 1048576.0 + 0.5)
                  / 1048576.0), 6) AS avg_mid,
        MIN(best_ask - best_bid) AS min_spread,
@@ -307,8 +307,8 @@ def q_streaming_sessionize_replay(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     # Complete-mode output goes through foreachBatch to DISTRIBUTED
     # parquet, one versioned dir per epoch, last version read back —
-    # the standard complete-to-external-store recipe. The old memory
-    # sink collected the FULL per-epoch result into driver-heap Rows:
+    # the standard complete-to-external-store recipe. A memory sink
+    # would collect the FULL per-epoch result into driver-heap Rows:
     # fine for the 120-row windowed-metrics output, fatal at sf100
     # where complete-mode session state (no watermark eviction) already
     # strains the heap and the session table itself is millions of
@@ -369,7 +369,7 @@ def q_streaming_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     # content-hash-keyed state: size-adaptive like the CDC replay. The
     # doc count comes from the documents parquet FOOTER (plants are
-    # row-preserving), not a Spark count job (round 13).
+    # row-preserving), not a Spark count job.
     spark.conf.set(
         "spark.sql.shuffle.partitions",
         _stream_parts(parquet_rows(f"{sf_dir}/documents.parquet")),
@@ -489,31 +489,28 @@ def q_streaming_vpin_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_streaming_vpin_skewed_replay(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """``streaming_vpin_replay`` under a HOT KEY (round-9 verdict #6):
-    the tape's symbol collapses to S0 for 90% of prints
-    (``raw_nonce % 10 <> 0`` — the same per-row remap in the oracle's
-    trades CTE), so the keyed state shuffle funnels ~90% of the stream
-    through one state partition. Keyed ordered state is inherently
-    sequential PER KEY — the scale question this gate pins is whether
-    the hot key degrades gracefully (Arrow-batched state op streams the
-    key's groups batch-by-batch; measured at sf1: within ~1.1x of the
-    uniform twin's wall, docs/SCALE_NOTES.md round-10 table) rather
-    than OOMing a partition or wedging the micro-batch. The production
-    remedy past graceful degradation is composite state keys — now the
-    SKEW-DISPATCHED DEFAULT (round-11 verdict #4): when the tape's
-    hottest key carries >= ``SPARK_GRAFT_VPIN_COMPOSITE_ROWS`` rows
-    (default 4M; hint = one column-pruned batch scan,
-    ``trade_stream.tape_max_rows_per_key``), the state key becomes
-    (symbol × time-epoch) — the op carries within-epoch accumulators
-    only, and the associative cross-epoch composition (volume clock =
-    exact sum, tick carry = last-non-null) runs as a batch pass over
-    one summary row per epoch (round-10 verdict #5; implementation
+    """``streaming_vpin_replay`` under a HOT KEY: the tape's symbol
+    collapses to S0 for 90% of prints (``raw_nonce % 10 <> 0`` — the
+    same per-row remap in the oracle's trades CTE), so the keyed state
+    shuffle funnels ~90% of the stream through one state partition.
+    Keyed ordered state is inherently sequential PER KEY — the scale
+    question this gate pins is whether the hot key degrades gracefully
+    (Arrow-batched state op streams the key's groups batch-by-batch;
+    measured at sf1: within ~1.1x of the uniform twin's wall,
+    docs/SCALE_NOTES.md) rather than OOMing a partition or wedging the
+    micro-batch. The production remedy past graceful degradation is
+    composite state keys, SKEW-DISPATCHED: when the tape's hottest key
+    carries >= ``trade_stream.VPIN_COMPOSITE_ROWS`` rows (4M; hint = one
+    column-pruned batch scan, ``trade_stream.tape_max_rows_per_key``),
+    the state key becomes (symbol × time-epoch) — the op carries
+    within-epoch accumulators only, and the associative cross-epoch
+    composition (volume clock = exact sum, tick carry = last-non-null)
+    runs as a batch pass over one summary row per epoch (implementation
     ``streaming/trade_stream.py:stateful_signed_buckets_composite`` /
     ``compose_epoch_buckets``). Small/uniform tapes keep the plain
-    per-symbol key (epoch composition is pure overhead there);
-    ``SPARK_GRAFT_VPIN_COMPOSITE=1/0`` forces either path. Output is
-    hash-identical either way — the oracle does not change; A/B walls
-    in REPLAY_DECOMP_r11, dispatch pinned in
+    per-symbol key (epoch composition is pure overhead there). Output is
+    hash-identical either way — the oracle does not change; A/B walls in
+    REPLAY_DECOMP_r11, dispatch pinned in
     ``tests/test_vpin_composite.py``."""
     import uuid
 
@@ -546,8 +543,8 @@ def q_streaming_vpin_skewed_replay(
         .parquet(f"{tape_base}/data/*/")
     )
     name = f"vpin_skew_{uuid.uuid4().hex[:8]}"
-    # hint memoized beside the content-keyed tape (round-12 verdict
-    # #4): no per-invocation groupBy rescan of the tape parquet
+    # hint memoized beside the content-keyed tape: no per-invocation
+    # groupBy rescan of the tape parquet
     composite = use_composite_vpin(
         tape_max_rows_per_key_cached(spark, tape_base)
     )
@@ -562,9 +559,9 @@ def q_streaming_vpin_skewed_replay(
     try:
         if composite:
             # ts range from parquet row-group statistics (metadata pull,
-            # exact for INT64; round 13) — the former Spark min/max agg
-            # was a full scheduled job per invocation on a tape whose
-            # footers already carry the answer. Fallback: stats absent.
+            # exact for INT64) — a Spark min/max agg would be a full
+            # scheduled job per invocation on a tape whose footers
+            # already carry the answer. Fallback: stats absent.
             rng = parquet_col_range(f"{tape_base}/data/*/", "ts_ms")
             if rng is None:
                 lo, hi = (

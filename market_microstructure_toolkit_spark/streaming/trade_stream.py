@@ -324,14 +324,14 @@ EPOCH_BUCKET_OUTPUT_SCHEMA = StructType(
 def stateful_signed_buckets_composite(
     stream: DataFrame, epoch_ms: int
 ) -> DataFrame:
-    """Composite-state-key half of the hot-key VPIN remedy (round-10
-    verdict #5, sketched in ``streaming_vpin_skewed_replay``'s
-    docstring): the state key becomes (exchange_id, symbol, epoch)
-    with ``epoch = floor(ts_ms / epoch_ms)``, so a symbol that
-    receives 90% of the tape no longer serializes through ONE state
-    partition — each micro-batch spreads the hot symbol over however
-    many epochs the batch's time span covers, and the state op's
-    per-group work parallelizes across cores.
+    """Composite-state-key half of the hot-key VPIN remedy (sketched in
+    ``streaming_vpin_skewed_replay``'s docstring): the state key becomes
+    (exchange_id, symbol, epoch) with
+    ``epoch = floor(ts_ms / epoch_ms)``, so a symbol that receives 90%
+    of the tape no longer serializes through ONE state partition — each
+    micro-batch spreads the hot symbol over however many epochs the
+    batch's time span covers, and the state op's per-group work
+    parallelizes across cores.
 
     The op carries only WITHIN-epoch accumulators (last price, tick
     carry, cumulative volume) and emits per row the within-epoch
@@ -514,17 +514,17 @@ _SKEW_HINT_MEMO: dict[tuple[str, str], int] = {}
 def tape_max_rows_per_key_cached(
     spark, tape_base: str, key: str = "symbol"
 ) -> int:
-    """``tape_max_rows_per_key`` memoized BESIDE the tape it describes
-    (round-12 verdict #4): the hint is a pure function of the tape
-    contents, and tapes are content-keyed + memoized (``plans/base.py:
-    _memo_tape``), so re-scanning the tape parquet on every gate
-    invocation was pure waste (a full groupBy over a 90M-row tape per
-    call at sf100; ~1.4 s of ``streaming_vpin_skewed_replay``'s sf0.1
-    wall). Two cache levels mirror the tape's own: an in-process dict
-    and a sidecar JSON inside the tape dir (atomic tmp+rename publish,
-    so concurrent readers never see a torn file; the sidecar ages out
-    with the tape dir itself). Falls back to the live scan when the
-    sidecar is unreadable or the dir is not writable."""
+    """``tape_max_rows_per_key`` memoized BESIDE the tape it describes:
+    the hint is a pure function of the tape contents, and tapes are
+    content-keyed + memoized (``plans/base.py:_memo_tape``), so
+    re-scanning the tape parquet on every gate invocation would be pure
+    waste (a full groupBy over a 90M-row tape per call at sf100; ~1.4 s
+    of ``streaming_vpin_skewed_replay``'s sf0.1 wall). Two cache levels
+    mirror the tape's own: an in-process dict and a sidecar JSON inside
+    the tape dir (atomic tmp+rename publish, so concurrent readers never
+    see a torn file; the sidecar ages out with the tape dir itself).
+    Falls back to the live scan when the sidecar is unreadable or the
+    dir is not writable."""
     import json
     import os
     import tempfile
@@ -553,24 +553,18 @@ def tape_max_rows_per_key_cached(
     return val
 
 
+#: hottest-key rowcount at or above which the VPIN replay keys its state
+#: on (symbol x time-epoch) instead of symbol. The sf10 hot-key tape's
+#: 9M-row S0 dispatches composite, measured 5.4x faster at hash parity
+#: (REPLAY_DECOMP_r11.json); the sf10 uniform tape's 2.5M rows per key
+#: stays single-key, where epoch composition is pure overhead.
+VPIN_COMPOSITE_ROWS = 4_000_000
+
+
 def use_composite_vpin(max_rows_per_key: int) -> bool:
-    """Dispatch the VPIN state key: plain per-symbol state below the
-    threshold, composite (symbol x time-epoch) state above it
-    (round-11 verdict #4 — the flag becomes a skew-dispatched default).
-
-    ``SPARK_GRAFT_VPIN_COMPOSITE=1/0`` still forces either path;
-    otherwise composite engages when the hottest key carries at least
-    ``SPARK_GRAFT_VPIN_COMPOSITE_ROWS`` rows (default 4M — the sf10
-    hot-key tape's 9M-row S0 dispatches composite, measured 5.4x faster
-    at hash parity, REPLAY_DECOMP_r11.json; the sf10 uniform tape's
-    2.5M-rows-per-key stays single-key where epoch composition is pure
-    overhead). Dispatch changes the physical plan only — both paths are
-    hash-identical (tests/test_vpin_composite.py)."""
-    import os
-
-    force = os.environ.get("SPARK_GRAFT_VPIN_COMPOSITE", "").strip()
-    if force in ("0", "1"):
-        return force == "1"
-    return max_rows_per_key >= int(
-        os.environ.get("SPARK_GRAFT_VPIN_COMPOSITE_ROWS", "4000000")
-    )
+    """Dispatch the VPIN state key: plain per-symbol state below
+    :data:`VPIN_COMPOSITE_ROWS` on the hottest key, composite
+    (symbol x time-epoch) state at or above it. Dispatch changes the
+    physical plan only — both paths are hash-identical
+    (tests/test_vpin_composite.py)."""
+    return max_rows_per_key >= VPIN_COMPOSITE_ROWS

@@ -1,8 +1,8 @@
-"""Round-9 window-dispatch audit: every gate that size-dispatches to a
+"""Window-dispatch audit: every gate that size-dispatches to a
 segmented scale path must produce IDENTICAL results on both paths.
 
-Forcing the dispatch with SPARK_GRAFT_SEG_THRESHOLD=0 at sf0.001 and
-comparing row-set equality against the plain path (threshold at its
+Forcing the dispatch by patching ``SEG_THRESHOLD_ROWS`` to 0 at sf0.001
+and comparing row-set equality against the plain path (threshold at its
 default, far above the fixture sizes) pins:
 
 - the W6 gap-group <-> gated-raw-frame equivalence (book_rv_reset),
@@ -13,8 +13,6 @@ default, far above the fixture sizes) pins:
 """
 
 from __future__ import annotations
-
-import os
 
 import pytest
 
@@ -77,17 +75,12 @@ def _rows(spark, name):
 
 
 @pytest.mark.parametrize("name", DISPATCHED)
-def test_plain_and_segmented_paths_agree(spark, name):
-    old = os.environ.pop("SPARK_GRAFT_SEG_THRESHOLD", None)
-    try:
-        plain, cols_p = _rows(spark, name)
-        os.environ["SPARK_GRAFT_SEG_THRESHOLD"] = "0"
-        seg, cols_s = _rows(spark, name)
-    finally:
-        if old is None:
-            os.environ.pop("SPARK_GRAFT_SEG_THRESHOLD", None)
-        else:
-            os.environ["SPARK_GRAFT_SEG_THRESHOLD"] = old
+def test_plain_and_segmented_paths_agree(spark, monkeypatch, name):
+    from market_microstructure_toolkit_spark.operators import window_metrics as W
+
+    plain, cols_p = _rows(spark, name)
+    monkeypatch.setattr(W, "SEG_THRESHOLD_ROWS", 0)
+    seg, cols_s = _rows(spark, name)
     assert cols_p == cols_s
     assert len(plain) == len(seg)
     assert plain == seg

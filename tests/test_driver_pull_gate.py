@@ -1,46 +1,46 @@
-"""Round-14 size gate on driver-side pyarrow column pulls (r13 verdict
-#1): above the footer-metadata threshold every planning-constant pull
-must take the distributed Spark path instead of concatenating the
-column in driver memory. These tests force the over-threshold path on
-the small fixtures via the env overrides and pin (a) that the fallback
-actually engages and (b) that both paths produce identical planning
-constants."""
+"""Size gate on driver-side pyarrow column pulls: above the
+footer-metadata threshold every planning-constant pull must take the
+distributed Spark path instead of concatenating the column in driver
+memory. These tests force the over-threshold path on the small fixtures
+by patching the ``PULL_MAX_BYTES`` / ``PULL_MAX_ROWS`` constants and pin
+(a) that the fallback actually engages and (b) that both paths produce
+identical planning constants."""
 
 from __future__ import annotations
 
 import pytest
 
 
-def _gate_env(monkeypatch, **env):
-    """Apply env overrides and clear the histogram memo so each test
-    exercises a fresh dispatch decision. The gates read their env per
-    call, so the module needs no reload."""
+def _gate_limits(monkeypatch, **limits):
+    """Patch the pull limits and clear the histogram memo so each test
+    exercises a fresh dispatch decision. The gate reads the module
+    constants per call, so the module needs no reload."""
     from market_microstructure_toolkit_spark.plans import base as B
 
-    for k, v in env.items():
-        monkeypatch.setenv(k, v)
+    for k, v in limits.items():
+        monkeypatch.setattr(B, k, v)
     B._KEY_HIST_MEMO.clear()
     return B
 
 
 def test_parquet_column_raises_over_gate(monkeypatch, sf_dir):
-    B = _gate_env(monkeypatch, SPARK_GRAFT_PULL_MAX_BYTES="1")
+    B = _gate_limits(monkeypatch, PULL_MAX_BYTES=1)
     with pytest.raises(ValueError, match="size"):
         B.parquet_column(f"{sf_dir}/events.parquet", "event_type")
 
 
 def test_parquet_column_rows_gate(monkeypatch, sf_dir):
-    B = _gate_env(monkeypatch, SPARK_GRAFT_PULL_MAX_ROWS="1")
+    B = _gate_limits(monkeypatch, PULL_MAX_ROWS=1)
     with pytest.raises(ValueError, match="size"):
         B.parquet_column(f"{sf_dir}/events.parquet", "event_type")
 
 
 def test_mod4_hist_spark_fallback_exact(monkeypatch, spark, sf_dir):
     """The distributed histogram equals the arrow one bit-for-bit."""
-    B = _gate_env(monkeypatch)
+    B = _gate_limits(monkeypatch)
     arrow_hist = B._mod4_hist(sf_dir)
     assert arrow_hist is not None
-    B = _gate_env(monkeypatch, SPARK_GRAFT_PULL_MAX_BYTES="1")
+    B = _gate_limits(monkeypatch, PULL_MAX_BYTES=1)
     spark_hist = B._mod4_hist(sf_dir)
     B._KEY_HIST_MEMO.clear()
     assert spark_hist == arrow_hist
@@ -60,9 +60,9 @@ def test_mod4_hist_spark_fallback_negative_and_null(monkeypatch, spark, tmp_path
         pa.table({"user_id": pa.array(ids, type=pa.int64())}),
         d / "events.parquet",
     )
-    B = _gate_env(monkeypatch)
+    B = _gate_limits(monkeypatch)
     arrow_hist = B._mod4_hist(str(d))
-    B = _gate_env(monkeypatch, SPARK_GRAFT_PULL_MAX_BYTES="1")
+    B = _gate_limits(monkeypatch, PULL_MAX_BYTES=1)
     spark_hist = B._mod4_hist(str(d))
     B._KEY_HIST_MEMO.clear()
     assert arrow_hist == spark_hist
@@ -77,9 +77,9 @@ def test_book_symbols_same_both_paths(monkeypatch, spark, sf_dir):
         _book_symbols,
     )
 
-    B = _gate_env(monkeypatch)
+    B = _gate_limits(monkeypatch)
     fast = _book_symbols(spark, sf_dir)
-    B = _gate_env(monkeypatch, SPARK_GRAFT_PULL_MAX_BYTES="1")
+    B = _gate_limits(monkeypatch, PULL_MAX_BYTES=1)
     slow = _book_symbols(spark, sf_dir)
     B._KEY_HIST_MEMO.clear()
     assert fast == slow == ["S0", "S1", "S2", "S3"]
@@ -90,9 +90,9 @@ def test_event_types_same_both_paths(monkeypatch, spark, sf_dir):
         _event_types,
     )
 
-    _gate_env(monkeypatch)
+    _gate_limits(monkeypatch)
     fast = _event_types(spark, sf_dir)
-    _gate_env(monkeypatch, SPARK_GRAFT_PULL_MAX_BYTES="1")
+    _gate_limits(monkeypatch, PULL_MAX_BYTES=1)
     slow = _event_types(spark, sf_dir)
     assert fast == slow
     assert len(fast) >= 1
@@ -135,7 +135,7 @@ def test_hist_not_memoized_on_stat_failure(monkeypatch, sf_dir):
     under the path-only key."""
     import os
 
-    B = _gate_env(monkeypatch)
+    B = _gate_limits(monkeypatch)
     real_stat = os.stat
 
     def bad_stat(p, *a, **kw):
@@ -183,10 +183,10 @@ def test_column_pull_fits_limits_are_inclusive(monkeypatch, tmp_path):
         (rows - 1, nbytes, False),
         (rows, nbytes - 1, False),
     ):
-        B = _gate_env(
+        B = _gate_limits(
             monkeypatch,
-            SPARK_GRAFT_PULL_MAX_ROWS=str(max_rows),
-            SPARK_GRAFT_PULL_MAX_BYTES=str(max_bytes),
+            PULL_MAX_ROWS=max_rows,
+            PULL_MAX_BYTES=max_bytes,
         )
         assert B._column_pull_fits(files, "user_id") is fits
     assert B._column_pull_fits(files, "absent") is False

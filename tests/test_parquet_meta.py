@@ -201,9 +201,7 @@ def test_missing_file_raises(root):
 
 @pytest.mark.parametrize("layout", LAYOUTS)
 @pytest.mark.parametrize("col", COLS)
-def test_column_pull_fits_default_limits(monkeypatch, root, layout, col):
-    monkeypatch.delenv("SPARK_GRAFT_PULL_MAX_BYTES", raising=False)
-    monkeypatch.delenv("SPARK_GRAFT_PULL_MAX_ROWS", raising=False)
+def test_column_pull_fits_default_limits(root, layout, col):
     files = part_files(os.path.join(root, layout))
     # no files: nothing to decode, so the gate holds vacuously
     assert B._column_pull_fits(files, col) is (col != "nope" or not files)

@@ -59,7 +59,8 @@ def test_hint_reports_max_not_average(skew_dir):
     assert mx >= int(0.85 * n)
 
 
-def test_hot_key_crosses_threshold_uniform_does_not(skew_dir):
+def test_hot_key_crosses_threshold_uniform_does_not(skew_dir, monkeypatch):
+    from market_microstructure_toolkit_spark.operators import window_metrics as W
     from market_microstructure_toolkit_spark.operators.window_metrics import (
         use_segmented,
     )
@@ -69,16 +70,9 @@ def test_hot_key_crosses_threshold_uniform_does_not(skew_dir):
     )
 
     n = parquet_rows(f"{skew_dir}/events.parquet")
-    old = os.environ.get("SPARK_GRAFT_SEG_THRESHOLD")
-    os.environ["SPARK_GRAFT_SEG_THRESHOLD"] = str(n // 2)
-    try:
-        assert use_segmented(book_rows_per_key(skew_dir))
-        assert not use_segmented(book_rows_per_key(SRC))
-    finally:
-        if old is None:
-            os.environ.pop("SPARK_GRAFT_SEG_THRESHOLD", None)
-        else:
-            os.environ["SPARK_GRAFT_SEG_THRESHOLD"] = old
+    monkeypatch.setattr(W, "SEG_THRESHOLD_ROWS", n // 2)
+    assert use_segmented(book_rows_per_key(skew_dir))
+    assert not use_segmented(book_rows_per_key(SRC))
 
 
 def _gate_rows(spark, name, sf_dir):
@@ -89,9 +83,12 @@ def _gate_rows(spark, name, sf_dir):
 
 
 @pytest.mark.parametrize("name", GATES)
-def test_skew_parity_plain_vs_segmented_vs_oracle(spark, name, skew_dir):
+def test_skew_parity_plain_vs_segmented_vs_oracle(
+    spark, monkeypatch, name, skew_dir
+):
     import duckdb
 
+    from market_microstructure_toolkit_spark.operators import window_metrics as W
     from market_microstructure_toolkit_spark.plans.base import (
         REGISTRY,
         parquet_rows,
@@ -99,20 +96,13 @@ def test_skew_parity_plain_vs_segmented_vs_oracle(spark, name, skew_dir):
     from tools.check_oracle import canon_hash
 
     n = parquet_rows(f"{skew_dir}/events.parquet")
-    old = os.environ.get("SPARK_GRAFT_SEG_THRESHOLD")
-    try:
-        # threshold between avg (n/4) and the hot key (~0.9n): the real
-        # dispatch decision, not a force — the hot key alone crosses it
-        os.environ["SPARK_GRAFT_SEG_THRESHOLD"] = str(n // 2)
-        df_seg, seg = _gate_rows(spark, name, skew_dir)
-        # far above everything: plain path
-        os.environ["SPARK_GRAFT_SEG_THRESHOLD"] = str(10 * n)
-        _, plain = _gate_rows(spark, name, skew_dir)
-    finally:
-        if old is None:
-            os.environ.pop("SPARK_GRAFT_SEG_THRESHOLD", None)
-        else:
-            os.environ["SPARK_GRAFT_SEG_THRESHOLD"] = old
+    # threshold between avg (n/4) and the hot key (~0.9n): the real
+    # dispatch decision, not a force — the hot key alone crosses it
+    monkeypatch.setattr(W, "SEG_THRESHOLD_ROWS", n // 2)
+    df_seg, seg = _gate_rows(spark, name, skew_dir)
+    # far above everything: plain path
+    monkeypatch.setattr(W, "SEG_THRESHOLD_ROWS", 10 * n)
+    _, plain = _gate_rows(spark, name, skew_dir)
     assert plain == seg, f"{name}: segmented path diverges under skew"
 
     sql = REGISTRY[name].sql

@@ -1,4 +1,4 @@
-"""Composite-state-key VPIN (round-10 verdict #5): the hot-key remedy
+"""Composite-state-key VPIN: the hot-key remedy
 splits the state key into (symbol, time-epoch) and re-composes across
 epochs in batch. These tests pin the COMPOSITION math directly — the
 within-epoch emissions are reconstructed with plain batch windows (no
@@ -6,8 +6,8 @@ streaming machinery), composed via ``compose_epoch_buckets``, and
 compared row-for-row against the single-pass batch reference
 (``classify_lee_ready`` + ``add_volume_buckets``). The streaming e2e
 twin is hash-checked against the DuckDB oracle by
-``streaming_vpin_skewed_replay`` under ``SPARK_GRAFT_VPIN_COMPOSITE=1``
-(green at sf0.001/0.01/0.1).
+``streaming_vpin_skewed_replay`` with ``VPIN_COMPOSITE_ROWS`` patched
+low enough that the composite path engages.
 """
 
 from __future__ import annotations
@@ -108,31 +108,16 @@ def test_composition_degenerate_epochs(spark):
     _assert_composition_exact(spark, tape, 1)
 
 
-def test_dispatch_force_overrides(monkeypatch):
-    from market_microstructure_toolkit_spark.streaming.trade_stream import (
-        use_composite_vpin,
-    )
-
-    monkeypatch.setenv("SPARK_GRAFT_VPIN_COMPOSITE", "1")
-    assert use_composite_vpin(0)
-    monkeypatch.setenv("SPARK_GRAFT_VPIN_COMPOSITE", "0")
-    assert not use_composite_vpin(10**9)
-
-
 def test_dispatch_threshold_default(monkeypatch):
     """Default 4M-row threshold: the sf10 hot-key tape (~9M rows on S0)
     dispatches composite; the sf10 uniform tape (~2.5M rows/key) and
     every <=sf1 tape stay single-key."""
-    from market_microstructure_toolkit_spark.streaming.trade_stream import (
-        use_composite_vpin,
-    )
+    from market_microstructure_toolkit_spark.streaming import trade_stream as ts
 
-    monkeypatch.delenv("SPARK_GRAFT_VPIN_COMPOSITE", raising=False)
-    monkeypatch.delenv("SPARK_GRAFT_VPIN_COMPOSITE_ROWS", raising=False)
-    assert use_composite_vpin(9_000_000)
-    assert not use_composite_vpin(2_500_000)
-    monkeypatch.setenv("SPARK_GRAFT_VPIN_COMPOSITE_ROWS", "100")
-    assert use_composite_vpin(101)
+    assert ts.use_composite_vpin(9_000_000)
+    assert not ts.use_composite_vpin(2_500_000)
+    monkeypatch.setattr(ts, "VPIN_COMPOSITE_ROWS", 100)
+    assert ts.use_composite_vpin(101)
 
 
 def test_hint_reports_hot_key_rows(spark, tmp_path, monkeypatch):
@@ -153,17 +138,14 @@ def test_hint_reports_hot_key_rows(spark, tmp_path, monkeypatch):
 
 
 def test_dispatch_exact_boundary(monkeypatch):
-    """>= semantics at the threshold itself (round-12 verdict #7): a
-    future default bump must not silently flip the at-threshold path."""
-    from market_microstructure_toolkit_spark.streaming.trade_stream import (
-        use_composite_vpin,
-    )
+    """>= semantics at the threshold itself: a future default bump must
+    not silently flip the at-threshold path."""
+    from market_microstructure_toolkit_spark.streaming import trade_stream as ts
 
-    monkeypatch.delenv("SPARK_GRAFT_VPIN_COMPOSITE", raising=False)
-    monkeypatch.setenv("SPARK_GRAFT_VPIN_COMPOSITE_ROWS", "100")
-    assert not use_composite_vpin(99)
-    assert use_composite_vpin(100)
-    assert use_composite_vpin(101)
+    monkeypatch.setattr(ts, "VPIN_COMPOSITE_ROWS", 100)
+    assert not ts.use_composite_vpin(99)
+    assert ts.use_composite_vpin(100)
+    assert ts.use_composite_vpin(101)
 
 
 def test_gate_boundary_straddle_hash_parity(spark, monkeypatch):
@@ -174,12 +156,11 @@ def test_gate_boundary_straddle_hash_parity(spark, monkeypatch):
     from market_microstructure_toolkit_spark.streaming import trade_stream as ts
 
     gate = REGISTRY["streaming_vpin_skewed_replay"].spark
-    monkeypatch.delenv("SPARK_GRAFT_VPIN_COMPOSITE", raising=False)
 
     # prime the gate once so the memoized tape + hint sidecar exist,
     # then read the hint the dispatch will actually consume
     ts._SKEW_HINT_MEMO.clear()
-    monkeypatch.setenv("SPARK_GRAFT_VPIN_COMPOSITE_ROWS", "1")
+    monkeypatch.setattr(ts, "VPIN_COMPOSITE_ROWS", 1)
     baseline = sorted(map(repr, gate(spark, SF_DIR).collect()))
     keys = list(ts._SKEW_HINT_MEMO)
     assert len(keys) == 1, keys  # exactly the gate's tape
@@ -187,21 +168,21 @@ def test_gate_boundary_straddle_hash_parity(spark, monkeypatch):
     hint = ts.tape_max_rows_per_key_cached(spark, tape_base)
     assert hint > 0
 
-    monkeypatch.setenv("SPARK_GRAFT_VPIN_COMPOSITE_ROWS", str(hint))
+    monkeypatch.setattr(ts, "VPIN_COMPOSITE_ROWS", hint)
     at = sorted(map(repr, gate(spark, SF_DIR).collect()))
-    monkeypatch.setenv("SPARK_GRAFT_VPIN_COMPOSITE_ROWS", str(hint + 1))
+    monkeypatch.setattr(ts, "VPIN_COMPOSITE_ROWS", hint + 1)
     above = sorted(map(repr, gate(spark, SF_DIR).collect()))
 
-    monkeypatch.setenv("SPARK_GRAFT_VPIN_COMPOSITE_ROWS", str(hint))
+    monkeypatch.setattr(ts, "VPIN_COMPOSITE_ROWS", hint)
     assert ts.use_composite_vpin(hint)  # at-threshold -> composite
-    monkeypatch.setenv("SPARK_GRAFT_VPIN_COMPOSITE_ROWS", str(hint + 1))
+    monkeypatch.setattr(ts, "VPIN_COMPOSITE_ROWS", hint + 1)
     assert not ts.use_composite_vpin(hint)  # above -> single-key
     assert at == above == baseline
     assert len(at) > 0
 
 
 def test_cached_hint_equals_live_scan(spark, tmp_path):
-    """The tape-sidecar memo (round-12 verdict #4) returns EXACTLY the
+    """The tape-sidecar memo returns EXACTLY the
     live scan's value — first call computes + publishes the sidecar,
     second call reads it back without touching Spark."""
     from market_microstructure_toolkit_spark.streaming import trade_stream as ts
@@ -226,17 +207,17 @@ def test_cached_hint_equals_live_scan(spark, tmp_path):
 
 def test_auto_dispatch_composite_hash_parity(spark, monkeypatch):
     """End-to-end: with the row threshold lowered so the sf0.001 skewed
-    tape auto-dispatches composite, the gate's rows equal the forced
-    single-key run — dispatch is a physical-plan decision only."""
+    tape auto-dispatches composite, the gate's rows equal the
+    single-key run at the default threshold — dispatch is a
+    physical-plan decision only."""
     from market_microstructure_toolkit_spark.plans.queries import REGISTRY
+    from market_microstructure_toolkit_spark.streaming import trade_stream as ts
 
     gate = REGISTRY["streaming_vpin_skewed_replay"].spark
 
-    monkeypatch.setenv("SPARK_GRAFT_VPIN_COMPOSITE", "0")
     single = sorted(map(repr, gate(spark, SF_DIR).collect()))
 
-    monkeypatch.delenv("SPARK_GRAFT_VPIN_COMPOSITE", raising=False)
-    monkeypatch.setenv("SPARK_GRAFT_VPIN_COMPOSITE_ROWS", "1")
+    monkeypatch.setattr(ts, "VPIN_COMPOSITE_ROWS", 1)
     auto = sorted(map(repr, gate(spark, SF_DIR).collect()))
 
     assert auto == single

@@ -445,7 +445,7 @@ def main() -> int:
         "",
         "Every `dispatched` site above names the hint its dispatch reads.",
         "The hint contract is **max per-key rowcount, never average** —",
-        "an average stays under `seg_threshold` while a hot key's window",
+        "an average stays under `SEG_THRESHOLD_ROWS` while a hot key's window",
         "serializes on one task. Hint families:",
         "",
     ]
