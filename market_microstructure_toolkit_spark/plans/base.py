@@ -384,11 +384,14 @@ def _tape_parts(spark, glob_path: str, hi: int, per_part: int = 50_000) -> str:
     rowcount (metadata-only) scaled at per_part rows/partition, clamped
     [2, hi]. ``hi`` encodes the replay's key cardinality ceiling — an
     instrument-keyed state op (4 symbols) gains nothing past 4 state
-    partitions, while extra partitions cost a Python worker spin-up
-    per micro-batch each (measured both ways: 8 partitions on sf0.1
-    tapes wasted ~2.4s/gate on spin-up; 2 partitions at sf1 halved the
-    state throughput — size-adaptive is the only setting that survives
-    both).
+    partitions, while each extra partition is one more task per
+    micro-batch with a fixed cost: a state-store load and commit, and
+    for a Python state op the worker's per-task set-up (on CPython 3.11
+    that set-up re-reads pyspark.zip unless the worker runs under
+    ``worker_daemon.py``, 130-210 ms per task). Measured both
+    ways: 8 partitions on sf0.1 tapes cost ~2.4s/gate more than 2, and
+    2 partitions at sf1 halved the state throughput, so size-adaptive
+    is the only setting that survives both.
 
     The rowcount is read from the parquet FOOTERS via pyarrow — a pure
     metadata pull, no Spark job (``spark.read.parquet(glob).count()``

@@ -61,9 +61,9 @@ def q_streaming_ofi_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     name = f"ofi_replay_{uuid.uuid4().hex[:8]}"
     # state-store partitions = shuffle partitions; there are only a few
-    # instrument keys, so extra state partitions just spawn idle Python
-    # workers per micro-batch (measured: batch-0 addBatch 3.2s at 8
-    # partitions vs 0.8s at 2 — worker/state spin-up, not data).
+    # instrument keys, so extra state partitions are tasks per micro-batch
+    # with no data, each paying a fixed cost: a state-store load and
+    # commit, and a Python worker's per-task set-up (see _tape_parts).
     # Streaming ignores AQE — set it explicitly; production replaces
     # this harness value with a key-cardinality-sized count.
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")

@@ -12,6 +12,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 # Defaults for a local[N] session; on a real cluster the same keys are
 # what you would tune. Shuffles start at a fixed partition count that AQE
 # coalesces at runtime toward one task per core (parallelismFirst), and
@@ -66,6 +68,15 @@ _DEFAULT_CONFS: dict[str, str] = {
     # ContextCleaner reads this at SparkContext construction, so it must
     # be a session-build conf, not a runtime set.
     "spark.cleaner.referenceTracking.cleanCheckpoints": "true",
+    # workers import the package (daemon, pickled callbacks) from any cwd
+    "spark.executorEnv.PYTHONPATH": _PACKAGE_PARENT,
+    # workers skip pyspark.zip's per-task re-read (~0.15 s on CPython 3.11)
+    "spark.python.daemon.module": "market_microstructure_toolkit_spark.worker_daemon",
+    # ~10 ms per streaming checkpoint/log file against FileContext's ~34 ms
+    "spark.sql.streaming.checkpointFileManagerClass": (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    ),
 }
 
 

@@ -464,3 +464,70 @@ def test_sessionize_gate_rocksdb_state_parity(spark, sf_dir):
         spark.conf.set(key, default)
     assert rocks == heap
     assert len(rocks) > 0
+
+
+_CKPT_MANAGER = "spark.sql.streaming.checkpointFileManagerClass"
+
+
+def _dedup_replay_files(spark, tmp_path, manager: str) -> tuple[set, int, list]:
+    """Replay two files through a stateful dedup into a parquet sink under
+    ``manager``, then restart the query from its checkpoint. Returns the
+    file set under the run (UUIDs masked), the sink's row count, and the
+    restart's per-batch input rows."""
+    import re
+
+    from market_microstructure_toolkit_spark.plans import base as B
+
+    src = tmp_path / "in"
+    for part, ks in (("a", [1, 2, 2, 3]), ("b", [3, 4, 5])):
+        spark.createDataFrame([(k, k * 10) for k in ks], "k long, v long").coalesce(
+            1
+        ).write.parquet(str(src / part))
+        time.sleep(0.05)
+
+    def replay():
+        stream = (
+            spark.readStream.schema("k long, v long")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(str(src / "*"))
+        )
+        return B.replay_to_parquet(
+            spark, stream.dropDuplicates(["k"]), str(tmp_path / "run"), "dedup"
+        )
+
+    prev = {k: spark.conf.get(k) for k in (_CKPT_MANAGER, "spark.sql.shuffle.partitions")}
+    spark.conf.set(_CKPT_MANAGER, manager)
+    spark.conf.set("spark.sql.shuffle.partitions", "2")
+    try:
+        n = replay().count()
+        assert replay().count() == n
+        restart_rows = [p["numInputRows"] for p in B.LAST_PROGRESS]
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)
+    uuid = re.compile(r"[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}")
+    run = tmp_path / "run"
+    files = {uuid.sub("<id>", str(p.relative_to(run))) for p in run.rglob("*") if p.is_file()}
+    return files, n, restart_rows
+
+
+def test_checkpoint_layout_matches_file_context_manager(spark, tmp_path):
+    """The session's FileSystem-based checkpoint manager writes the same
+    offsets, commits, sources, state deltas (with their checksums) and
+    sink log as Spark's FileContext default, and a restart from its
+    committed checkpoint replays nothing."""
+    pkg = "org.apache.spark.sql.execution.streaming.checkpointing."
+    assert spark.conf.get(_CKPT_MANAGER) == pkg + "FileSystemBasedCheckpointFileManager"
+    fs_files, fs_rows, fs_restart = _dedup_replay_files(
+        spark, tmp_path / "fs", pkg + "FileSystemBasedCheckpointFileManager"
+    )
+    fc_files, fc_rows, _ = _dedup_replay_files(
+        spark, tmp_path / "fc", pkg + "FileContextBasedCheckpointFileManager"
+    )
+    assert fs_rows == fc_rows == 5
+    assert sum(fs_restart) == 0
+    for needed in ("offsets/1", "commits/1", "sources/0/0", "_spark_metadata/1"):
+        assert any(f.endswith(needed) for f in fs_files), (needed, sorted(fs_files))
+    assert any(f.endswith(".delta") for f in fs_files)
+    assert any(f.endswith(".delta.crc") for f in fs_files)
+    assert fs_files == fc_files, sorted(fs_files ^ fc_files)

@@ -38,3 +38,11 @@ def test_growth_class_sites_are_dispatched_or_bounded():
     rows, _ = window_audit.audit()
     bad = [r for r in rows if r["cls"] not in allowed]
     assert not bad, bad
+
+
+def test_committed_audit_document_is_current():
+    """docs/WINDOW_AUDIT.md names sites by line number, so any edit above
+    a window site moves them; rerun `python tools/window_audit.py`."""
+    import window_audit
+
+    assert window_audit.DOC.read_text() == window_audit.render()
