@@ -8,8 +8,15 @@ shuffle-partition count that AQE can shrink.
 
 from __future__ import annotations
 
+import glob
+import hashlib
 import os
+import shutil
+import warnings
 
+from py4j.protocol import Py4JError
+from pyspark import SparkContext
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
 _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -110,13 +117,118 @@ def ensure_session_confs(spark: SparkSession) -> SparkSession:
     return spark
 
 
-def get_spark(app_name: str = "mmt-spark", **extra_conf: str) -> SparkSession:
-    """Build (or fetch) a SparkSession.
+def _archive_key(spark_home: str) -> str:
+    """What the JVM checks before it maps a dynamic class-data archive:
+    its own build (the ``java`` that ``spark-class`` runs, found through
+    ``JAVA_HOME`` and then ``PATH``, and that JDK's ``release`` file) and
+    the classpath's jars (name, size and mtime of each)."""
+    java_home = os.environ.get("JAVA_HOME")
+    java = os.path.join(java_home, "bin", "java") if java_home else shutil.which("java") or "java"
+    java = os.path.realpath(java)
+    h = hashlib.sha256(java.encode())
+    with open(os.path.join(os.path.dirname(os.path.dirname(java)), "release"), "rb") as f:
+        h.update(f.read())
+    for e in sorted(os.scandir(os.path.join(spark_home, "jars")), key=lambda e: e.name):
+        st = e.stat()
+        h.update(f"\0{e.name}\0{st.st_size}\0{st.st_mtime_ns}".encode())
+    return h.hexdigest()[:32]
 
-    ``SPARK_GRAFT_CPUS`` controls local parallelism (default ``*``).
-    Extra conf kwargs override the defaults (dots replaced by passing the
-    full key as the kwarg name is impossible; pass via ``extra_conf`` dict
-    expansion with valid identifiers is not needed — use ``configure``).
+
+def _class_archive(extra_conf: dict[str, str]) -> tuple[str, str] | None:
+    """``(archive path, empty conf dir)`` for this launch, or None to
+    leave it as it is (see ``get_spark``). The archive (JEP 350) is install
+    state under ``$XDG_CACHE_HOME``. Spark puts the conf dir on the
+    classpath, and the JVM neither dumps nor maps an archive while a
+    non-empty directory is on it; Spark reads no ``*.template``, so an
+    empty directory stands in for a default one that holds only those."""
+    if SparkContext._gateway is not None or any(
+        k in os.environ for k in ("SPARK_CONF_DIR", "PYSPARK_SUBMIT_ARGS", "PYSPARK_GATEWAY_PORT")
+    ):
+        return None
+    if {"spark.driver.extraJavaOptions", "spark.driver.extraClassPath"} & extra_conf.keys():
+        return None
+    try:
+        spark_home = _find_spark_home()
+        default_conf = os.path.join(spark_home, "conf")
+        if os.path.isdir(default_conf) and not all(
+            n.endswith(".template") for n in os.listdir(default_conf)
+        ):
+            return None
+        cache = os.environ.get("XDG_CACHE_HOME") or os.path.expanduser("~/.cache")
+        root = os.path.join(cache, "market_microstructure_toolkit_spark", "cds")
+        conf_dir = os.path.join(root, "conf")
+        os.makedirs(conf_dir, exist_ok=True)
+        if not os.access(root, os.W_OK) or os.listdir(conf_dir):
+            return None
+        # a dump whose process died before its rename
+        for tmp in glob.glob(os.path.join(root, "*.tmp")):
+            try:
+                os.kill(int(tmp.rsplit(".", 2)[1]), 0)
+            except (ValueError, ProcessLookupError):
+                os.remove(tmp)
+            except PermissionError:
+                pass
+        return os.path.join(root, _archive_key(spark_home) + ".jsa"), conf_dir
+    except OSError:
+        return None
+
+
+def _dump_class_archive(spark: SparkSession, jsa: str) -> None:
+    """Dump the driver's loaded classes to ``jsa`` through the DiagnosticCommand
+    MBean's ``vmCds`` (the JVM runs with ``-XX:+RecordDynamicDumpInfo``), under
+    a per-process name and then renamed, so no start maps a torn file."""
+    gw, jvm = spark.sparkContext._gateway, spark.sparkContext._jvm
+    tmp = f"{jsa[:-4]}.{os.getpid()}.tmp"
+
+    def array(cls, *items):
+        arr = gw.new_array(cls, len(items))
+        for i, item in enumerate(items):
+            arr[i] = item
+        return arr
+
+    cls = jvm.java.lang.Class
+    # the platform server's class is not exported; call through its interface
+    sig = ("javax.management.ObjectName", "java.lang.String",
+           "[Ljava.lang.Object;", "[Ljava.lang.String;")
+    invoke = cls.forName("javax.management.MBeanServerConnection").getMethod(
+        "invoke", array(cls, *map(cls.forName, sig))
+    )
+    strings = jvm.java.lang.String
+    args = array(
+        jvm.java.lang.Object,
+        jvm.javax.management.ObjectName("com.sun.management:type=DiagnosticCommand"),
+        "vmCds",
+        array(jvm.java.lang.Object, array(strings, "dynamic_dump", tmp)),
+        array(strings, sig[3]),
+    )
+    system = jvm.java.lang.System
+    out = system.out
+    # the dump reports itself on System.out, which is the caller's stdout
+    system.setOut(jvm.java.io.PrintStream(jvm.java.io.OutputStream.nullOutputStream()))
+    try:
+        invoke.invoke(jvm.java.lang.management.ManagementFactory.getPlatformMBeanServer(), args)
+        os.replace(tmp, jsa)
+    except (Py4JError, OSError) as e:  # the session works without the archive
+        warnings.warn(f"class-data archive not written: {e!r}")
+        if os.path.exists(tmp):
+            os.remove(tmp)
+    finally:
+        system.setOut(out)
+
+
+def get_spark(app_name: str = "mmt-spark", **extra_conf: str) -> SparkSession:
+    """Build a ``local[N]`` SparkSession with ``_DEFAULT_CONFS`` (N from
+    ``SPARK_GRAFT_CPUS``, default ``*``), or fetch the active one. Keyword
+    confs override the defaults; pass dotted keys by dict expansion,
+    ``get_spark("app", **{"spark.sql.shuffle.partitions": "8"})``.
+
+    A call that launches the driver JVM maps a cached class-data archive
+    of an earlier launch, about halving the start, or records one and
+    dumps it before returning, which slows that one start. It is skipped
+    when a JVM is already up, when the caller sets the driver's
+    ``extraJavaOptions`` or ``extraClassPath``, ``SPARK_CONF_DIR`` or
+    ``PYSPARK_SUBMIT_ARGS``, when the default conf dir holds more than
+    ``*.template`` files, or when the cache dir cannot be written.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     builder = SparkSession.builder.appName(app_name).master(f"local[{cpus}]")
@@ -124,7 +236,23 @@ def get_spark(app_name: str = "mmt-spark", **extra_conf: str) -> SparkSession:
         builder = builder.config(k, v)
     for k, v in extra_conf.items():
         builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    archive = _class_archive(extra_conf)
+    if archive is None:
+        spark = builder.getOrCreate()
+    else:
+        jsa, conf_dir = archive
+        dump = not os.path.exists(jsa)
+        # -Xlog:cds*=off: the JVM warns on stdout when it cannot map an
+        # archive (and then starts without it)
+        flag = "-XX:+RecordDynamicDumpInfo" if dump else f"-XX:SharedArchiveFile={jsa}"
+        builder = builder.config("spark.driver.extraJavaOptions", f"{flag} -Xlog:cds*=off")
+        os.environ["SPARK_CONF_DIR"] = conf_dir
+        try:
+            spark = builder.getOrCreate()
+        finally:
+            del os.environ["SPARK_CONF_DIR"]
+        if dump:
+            _dump_class_archive(spark, jsa)
     spark.sparkContext.setLogLevel("WARN")
     # Century-scale streaming state: SPARK_GRAFT_STATE_STORE=rocksdb
     # swaps the default heap-backed HDFS state store for RocksDB
