@@ -32,13 +32,38 @@ def book_window(
     return Window.partitionBy(*keys).orderBy(*order)
 
 
+def over_sql(keys: tuple[str, ...], order: str | list = (), frame: str = "") -> str:
+    """SQL text of the window partitioned by ``keys`` and ordered by
+    ``order``, plus an optional frame clause, for window expressions
+    built as SQL text, as in ``lag(x) OVER (<this text>)``. Every window
+    written as SQL text in the package goes through here, so the window
+    audit (``tools/window_audit.py``) finds it. Names are backquoted; an
+    order entry may end in `` DESC``.
+
+    A SQL expression is parsed in one JVM call, while the same Column
+    tree costs a py4j round trip per node and per-call call-site
+    capture."""
+
+    def name(c: str) -> str:
+        col, _, direction = c.partition(" ")
+        return f"`{col}` {direction}".rstrip()
+
+    order = [order] if isinstance(order, str) else list(order)
+    text = "PARTITION BY " + ", ".join(map(name, keys))
+    if order:
+        text += " ORDER BY " + ", ".join(map(name, order))
+    return f"{text} {frame}".rstrip()
+
+
 # ---------------------------------------------------------------------------
 # W1/W2/W3 — the three order-flow-imbalance definitions
 # ---------------------------------------------------------------------------
 
 def ofi_l1_expr(w: WindowSpec, mode: str = "strict") -> Column:
-    """L1 order-flow imbalance vs previous row; three reference variants
-    (implemented as one parameterized operator per SURVEY §7.3.1):
+    """L1 order-flow imbalance vs previous row over the series window
+    ``w``; three reference variants (SURVEY §7.3.1), of which this builds
+    ``strict`` and ``kyle``. The ``lobster`` one is SQL text,
+    :func:`ofi_lobster_sql`:
 
     - ``strict`` (metrics.py:293-333, "Cont-style"): strict inequalities on
       ``bid1_price``/``ask1_price``; bid: +delta(size) if up, -prev size if
@@ -95,22 +120,28 @@ def ofi_l1_expr(w: WindowSpec, mode: str = "strict") -> Column:
         first = F.row_number().over(w) == 1
         return F.when(first, F.lit(0.0)).otherwise(d_bid - d_ask)
 
-    if mode == "lobster":
-        bb, ba = F.col("best_bid"), F.col("best_ask")
-        pbb, pba = F.lag(bb).over(w), F.lag(ba).over(w)
-
-        def ind01(cond: Column) -> Column:
-            return F.when(F.coalesce(cond, F.lit(False)), 1.0).otherwise(0.0)
-
-        total = (
-            ind01(bb > pbb) * bq
-            - ind01(bb < pbb) * pbq
-            - ind01(ba > pba) * paq
-            + ind01(ba < pba) * aq
-        )
-        return F.coalesce(total, F.lit(0.0))
-
     raise ValueError(f"unknown OFI mode: {mode!r}")
+
+
+def ofi_lobster_sql(over: str) -> str:
+    """The ``lobster`` OFI of :func:`ofi_l1_expr` as one SQL expression,
+    its lags taken over the window whose SQL text (:func:`over_sql`) is
+    ``over``."""
+
+    def prev(c: str) -> str:
+        return f"lag({c}) OVER ({over})"
+
+    def ind01(cond: str) -> str:
+        return f"CASE WHEN coalesce({cond}, false) THEN 1.0D ELSE 0.0D END"
+
+    bb, ba = prev("best_bid"), prev("best_ask")
+    total = (
+        f"{ind01('best_bid > ' + bb)} * bid1_size"
+        f" - {ind01('best_bid < ' + bb)} * {prev('bid1_size')}"
+        f" - {ind01('best_ask > ' + ba)} * {prev('ask1_size')}"
+        f" + {ind01('best_ask < ' + ba)} * ask1_size"
+    )
+    return f"coalesce({total}, 0.0D)"
 
 
 def add_ofi_l1(
@@ -120,6 +151,8 @@ def add_ofi_l1(
     keys: tuple[str, ...] = S.PARTITION_KEYS,
     order_col: str = "ts_ms",
 ) -> DataFrame:
+    if mode == "lobster":
+        return df.withColumn(out_col, F.expr(ofi_lobster_sql(over_sql(keys, order_col))))
     return df.withColumn(out_col, ofi_l1_expr(book_window(keys, order_col), mode))
 
 
@@ -282,26 +315,28 @@ def add_depth_ofi(
 # W10/W13 — rolling correlation, tail limit
 # ---------------------------------------------------------------------------
 
-def _moment_states(*specs: WindowSpec) -> list[Column]:
-    """Running moments of the null-aligned pair ``__rc_x``/``__rc_y``
-    over each window in ``specs``, as one struct per window: pair count,
-    means, population (co)variances and the x and y ranges."""
-    x, y = F.col("__rc_x"), F.col("__rc_y")
+def _moment_states(*overs: str) -> list[str]:
+    """SQL of the running moments of the null-aligned pair
+    ``__rc_x``/``__rc_y`` over each window in ``overs`` (SQL window
+    text), as one struct per window: pair count, means, population
+    (co)variances and the x and y ranges."""
     aggs = {
-        "n": F.count(x),
-        "mx": F.avg(x),
-        "my": F.avg(y),
-        "vx": F.var_pop(x),
-        "vy": F.var_pop(y),
-        "cxy": F.covar_pop(x, y),
-        "x_lo": F.min(x),
-        "x_hi": F.max(x),
-        "y_lo": F.min(y),
-        "y_hi": F.max(y),
+        "n": "count(__rc_x)",
+        "mx": "avg(__rc_x)",
+        "my": "avg(__rc_y)",
+        "vx": "var_pop(__rc_x)",
+        "vy": "var_pop(__rc_y)",
+        "cxy": "covar_pop(__rc_x, __rc_y)",
+        "x_lo": "min(__rc_x)",
+        "x_hi": "max(__rc_x)",
+        "y_lo": "min(__rc_y)",
+        "y_hi": "max(__rc_y)",
     }
     return [
-        F.struct(*[agg.over(w).alias(name) for name, agg in aggs.items()])
-        for w in specs
+        "named_struct("
+        + ", ".join(f"'{name}', {agg} OVER ({over})" for name, agg in aggs.items())
+        + ")"
+        for over in overs
     ]
 
 
@@ -380,33 +415,28 @@ def add_rolling_corr(
     the lag and the prefix window. The (keys, block) windows reuse the
     per-key hash partitioning: no shuffle beyond the per-key one."""
     order = [order_col] if isinstance(order_col, str) else list(order_col)
-    pair = F.col(x_col).isNotNull() & F.col(y_col).isNotNull()
-    pos = F.col("__rc_pos")
-    by_key = Window.partitionBy(*keys)
-    by_blk = Window.partitionBy(*keys, "__rc_blk")
-    run = (Window.unboundedPreceding, Window.currentRow)
+    x, y = f"`{x_col}`", f"`{y_col}`"
+    pair = f"{x} IS NOT NULL AND {y} IS NOT NULL"
+    blk = (*keys, "__rc_blk")
+    run = "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW"
     sfx, pfx = _moment_states(
-        by_blk.orderBy(pos.desc()).rowsBetween(*run),
-        by_blk.orderBy(pos).rowsBetween(*run),
+        over_sql(blk, "__rc_pos DESC", run), over_sql(blk, "__rc_pos", run)
     )
+    by_blk_pos = over_sql(keys, ["__rc_blk", "__rc_pos"])
     staged = (
-        df.select(
+        df.selectExpr(
             "*",
-            F.when(pair, F.col(x_col).cast("double")).alias("__rc_x"),
-            F.when(pair, F.col(y_col).cast("double")).alias("__rc_y"),
-            (F.row_number().over(by_key.orderBy(*order)) - 1).alias("__rc_pos"),
+            f"CASE WHEN {pair} THEN CAST({x} AS DOUBLE) END AS __rc_x",
+            f"CASE WHEN {pair} THEN CAST({y} AS DOUBLE) END AS __rc_y",
+            f"row_number() OVER ({over_sql(keys, order)}) - 1 AS __rc_pos",
         )
-        .withColumn("__rc_blk", pos - pos % window)
-        .withColumn("__rc_sfx", sfx)
-        .withColumn("__rc_pfx", pfx)
-        .withColumn(
-            "__rc_a",
-            F.when(
-                pos % window != window - 1,
-                F.lag("__rc_sfx", window - 1).over(
-                    by_key.orderBy("__rc_blk", "__rc_pos")
-                ),
-            ),
+        .selectExpr("*", f"__rc_pos - __rc_pos % {window} AS __rc_blk")
+        .selectExpr("*", f"{sfx} AS __rc_sfx")
+        .selectExpr("*", f"{pfx} AS __rc_pfx")
+        .selectExpr(
+            "*",
+            f"CASE WHEN __rc_pos % {window} != {window - 1}"
+            f" THEN lag(__rc_sfx, {window - 1}) OVER ({by_blk_pos}) END AS __rc_a",
         )
     )
     return staged.withColumn(
@@ -570,6 +600,18 @@ def _segment_expr(seg_col: str, n_segments: int) -> Column:
     )
 
 
+def _chunk_window(keys: tuple[str, ...]) -> tuple[tuple[str, ...], str]:
+    """Partition keys and order of the chunk-local window that
+    :func:`rolling_segmented` runs its stages over."""
+    return (*keys, "__chunk"), "__pos"
+
+
+def chunk_over_sql(keys: tuple[str, ...] = S.PARTITION_KEYS) -> str:
+    """SQL text of the chunk-local window :func:`rolling_segmented` hands
+    its ``agg_builder``, for stage expressions built as SQL text."""
+    return over_sql(*_chunk_window(keys))
+
+
 def rolling_segmented(
     df: DataFrame,
     agg_builder,
@@ -612,7 +654,8 @@ def rolling_segmented(
     ``agg_builder(w) -> dict[str, Column] | list[dict]``: ``w`` is the
     chunk-local base WindowSpec (partition + order, NO frame — apply
     ``w.rowsBetween(...)`` for frame aggregates, or use ``F.lag(c, k)
-    .over(w)`` directly). A LIST of dicts runs as chained stages: each
+    .over(w)`` directly; :func:`chunk_over_sql` is its SQL text). A LIST
+    of dicts runs as chained stages: each
     stage's columns are materialized before the next stage's window
     expressions may reference them (window-over-window, e.g. lag-based
     returns feeding a rolling RV). ``window`` must then cover the TOTAL
@@ -679,7 +722,8 @@ def rolling_segmented(
         .withColumn("__halo", F.col("__c.h"))
         .drop("__c", "__rows")
     )
-    w_base = Window.partitionBy(*keys, "__chunk").orderBy("__pos")
+    chunk_keys, chunk_order = _chunk_window(keys)
+    w_base = Window.partitionBy(*chunk_keys).orderBy(chunk_order)
     stages = agg_builder(w_base)
     if isinstance(stages, dict):
         stages = [stages]

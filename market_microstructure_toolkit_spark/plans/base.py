@@ -483,8 +483,8 @@ def _scratch(prefix: str) -> str:
 
 #: per-batch progress of the most recent replay_to_parquet run in this
 #: process (list of StreamingQueryProgress dicts) — read by
-#: tools/cdc_decompose.py to attribute replay wall time to micro-batch
-#: count vs per-batch state throughput
+#: tools/replay_decompose.py to attribute replay wall time to micro-batch
+#: count vs per-batch state throughput, and by tests/test_streaming.py
 LAST_PROGRESS: list = []
 
 

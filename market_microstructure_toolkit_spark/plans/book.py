@@ -18,9 +18,9 @@ Derivation (one snapshot row per event; 4 symbols partitioned by user_id):
   (the reference's blank-pad case); L1 sizes NULL when
   ``event_id % 97 == 0`` (microprice/imbalance null paths).
 
-Guard-branch plants (round 7): rare pathological rows so every
-driver-visible hash also pins the guard semantics, not just the happy
-path. Independent predicates on large primes — they compose
+Guard-branch plants: rare pathological rows, so every driver-visible
+hash pins the guard semantics and not just the happy path. They are
+independent predicates on large primes, so they compose
 deterministically when residues coincide at big SFs:
 
 - CROSSED book (``event_id % 487 == 486``): spread sign flips, so
@@ -32,12 +32,12 @@ deterministically when residues coincide at big SFs:
 - THIN LADDER (``event_id % 503 == 502``): every level >= 2 NULL on
   both sides (walk partial fill, cost-curve exclusion).
 
-``SPARK_GRAFT_PLANTS=0`` (round-8 verdict #1) disables the four plant
-predicates in BOTH the Spark and DuckDB derivations — a BENCH-ONLY
-A/B control to separate the plants' real semantic cost from machine
-variance in round-over-round comparisons. Correctness artifacts are
-always recorded with plants ON (the default); the env var is read at
-derivation/SQL-build time, so set it before importing the plans.
+``SPARK_GRAFT_PLANTS=0`` disables the four plant predicates in BOTH the
+Spark and DuckDB derivations. It is a bench-only control: it separates
+the plants' own cost from machine variance when two trees are compared.
+Correctness artifacts are always recorded with plants ON (the default);
+the env var is read at derivation/SQL-build time, so set it before
+importing the plans.
 """
 
 from __future__ import annotations
@@ -77,8 +77,8 @@ def synthetic_book(spark: SparkSession, sf_dir: str, depth: int = BOOK_DEPTH) ->
     """events.parquet -> wide depth-K book frame (Spark side).
 
     Memoized per session: every book gate reads this same frame, so the
-    plan (the parquet schema read, the ``spread`` decision, the Column
-    tree) is built once per (session, events file identity, depth,
+    plan (the parquet schema read, the keyed-partitioning decision, the
+    Column tree) is built once per (session, events file identity, depth,
     plants toggle) and shared. Only the plan is shared, never data: the
     frame is not cached, and each action re-reads the file. The key
     holds everything the plan's rows depend on: another session, a rewritten
@@ -103,19 +103,31 @@ def synthetic_book(spark: SparkSession, sf_dir: str, depth: int = BOOK_DEPTH) ->
 
 
 def _build_book(spark: SparkSession, sf_dir: str, depth: int) -> DataFrame:
-    from market_microstructure_toolkit_spark.partitioning import spread
     from market_microstructure_toolkit_spark.sources.events import read_events
 
     # events.parquet ts is TIMESTAMP(NANOS); read_events normalizes it to
     # epoch-nanos BIGINT whatever type the session's reader surfaces.
-    # spread BEFORE the expression-heavy derivation: a single-file
-    # parquet is one input split, which would put ~27 columns of per-row
-    # arithmetic on one core. spread() gives the derivation at least
-    # defaultParallelism partitions for the price of one exchange of the
-    # 5 narrow source columns, and is a no-op when the input already
-    # arrives split that finely.
-
-    ev = spread(read_events(spark, sf_dir))
+    ev = read_events(spark, sf_dir).withColumn(
+        "symbol",
+        F.concat(F.lit(BOOK_SYMBOL_PREFIX), (F.col("user_id") % 4).cast("string")),
+    )
+    # A single-file parquet is one input split, which would put the
+    # expression-heavy derivation, and every shuffle-free gate after it,
+    # on one core. Such an input (fewer partitions than cores) is
+    # hash-partitioned on symbol before the derivation. Nearly every book
+    # metric is a per-instrument window or group-by, and its exchange
+    # reuses this one (same key, spark.sql.shuffle.partitions buckets), so
+    # the book crosses one exchange where a round-robin spread would add a
+    # second. Only the narrow event columns a gate needs cross it (column
+    # pruning reaches below the repartition), and unlike a round-robin it
+    # does not sort them first. It keys on symbol alone: exchange_id is a
+    # literal, which the optimizer folds out of every window's
+    # (exchange_id, symbol) partition spec, so a repartition on both keys
+    # would not match the windows' and would stay an exchange of its own.
+    # The symbols land in distinct buckets (S0..S3 -> 14, 31, 5, 4 of 32),
+    # so gates with no shuffle of their own still get one task per symbol.
+    if ev.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism:
+        ev = ev.repartition("symbol")
     eid = F.col("event_id")
     mid0 = F.lit(100.0) + F.col("value") * F.lit(0.1)
     spr_base = F.lit(0.02) + (eid % 5).cast("double") * F.lit(0.01)
@@ -153,9 +165,7 @@ def _build_book(spark: SparkSession, sf_dir: str, depth: int) -> DataFrame:
         # millis — matches DuckDB's nanos->micros->epoch_ms flooring.
         "ts_ms": F.expr("ts DIV 1000000"),
         "exchange_id": F.lit(BOOK_EXCHANGE_ID),
-        "symbol": F.concat(
-            F.lit(BOOK_SYMBOL_PREFIX), (F.col("user_id") % 4).cast("string")
-        ),
+        "symbol": F.col("symbol"),
         "book_level": F.lit("L2"),
         "raw_nonce": eid,
         "best_bid": best_bid,

@@ -107,15 +107,6 @@ FROM book
 """
 
 
-def _spread_book(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """synthetic_book spread over cores for MAP-ONLY queries (window
-    queries parallelize at their shuffle; shuffle-free projections would
-    otherwise run on the single local input split)."""
-    from market_microstructure_toolkit_spark.partitioning import spread
-
-    return spread(synthetic_book(spark, sf_dir))
-
-
 @register("book_row_metrics", _ROW_METRICS_SQL)
 def q_book_row_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P2/P3/P4/P5/P7/P8/P9 as one shuffle-free projection (SURVEY §2.2)."""
@@ -211,7 +202,7 @@ def q_book_ofi_lobster_cum(spark: SparkSession, sf_dir: str) -> DataFrame:
         return out.select(*IDS, "ofi_l1", "ofi_l1_cum")
     out = W.rolling_segmented(
         book,
-        lambda w: {"ofi_l1": W.ofi_l1_expr(w, mode="lobster")},
+        lambda w: {"ofi_l1": F.expr(W.ofi_lobster_sql(W.chunk_over_sql(KEYS)))},
         window=2,
         keys=KEYS,
         order_col=ORDER_COLS,
@@ -601,28 +592,30 @@ def _corr_surface(
     The plain path computes both lag features over the per-key window
     and hands them to :func:`W.add_rolling_corr`, which merges running
     per-block moment states in O(1) per row instead of re-scanning a
-    50-row sliding frame.
+    50-row sliding frame. Both build their expressions as SQL text: a
+    few hundred py4j round trips per construction where the Column trees
+    took ~1,500.
 
     In segmented mode BOTH lag-derived features (OFI, return) compute
     inside the chunk+halo path as stage 1, the 50-row moments as stage
     2 (total lookback 1 + 49 -> window=51) — no per-key global window
     in any phase."""
     book = synthetic_book(spark, sf_dir)
-    mid2 = F.col("best_bid") + F.col("best_ask")
 
     if not segmented:
-        w = W.book_window(KEYS, ORDER_COLS)
-        feat = W.add_ofi_l1(
-            book, mode="lobster", out_col="ofi", keys=KEYS, order_col=ORDER_COLS
-        )
-        feat = feat.withColumn(
-            "ret_bps", (mid2 / F.lag(mid2).over(w) - F.lit(1.0)) * F.lit(1e4)
+        over = W.over_sql(KEYS, ORDER_COLS)
+        feat = book.selectExpr(
+            *IDS,
+            f"{W.ofi_lobster_sql(over)} AS ofi",
+            "((best_bid + best_ask) / lag(best_bid + best_ask)"
+            f" OVER ({over}) - 1.0D) * 10000.0D AS ret_bps",
         )
         corr = W.add_rolling_corr(
             feat, "ofi", "ret_bps", 50, out_col="__c", keys=KEYS,
             order_col=ORDER_COLS,
         )
     else:
+        mid2 = F.col("best_bid") + F.col("best_ask")
 
         def corr_cols(wf):
             ofi_x, ret_y = F.col("ofi"), F.col("ret_bps")
@@ -636,7 +629,7 @@ def _corr_surface(
         def build(w):
             return [
                 {
-                    "ofi": W.ofi_l1_expr(w, mode="lobster"),
+                    "ofi": F.expr(W.ofi_lobster_sql(W.chunk_over_sql(KEYS))),
                     "ret_bps": (mid2 / F.lag(mid2).over(w) - F.lit(1.0))
                     * F.lit(1e4),
                 },
@@ -1344,7 +1337,7 @@ def q_book_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     explode(array(...)) Generate barrier (higher-order aggregates are
     interpreted; naive multi-extraction re-runs the fold per field).
     Rounded 6dp (sums of <=K doubles reorder at ~1e-13)."""
-    book = _spread_book(spark, sf_dir)
+    book = synthetic_book(spark, sf_dir)
     state = F.explode(
         F.array(
             F.struct(

@@ -16,6 +16,7 @@ import warnings
 
 from py4j.protocol import Py4JError
 from pyspark import SparkContext
+from pyspark.errors import PySparkRuntimeError
 from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
@@ -216,6 +217,20 @@ def _dump_class_archive(spark: SparkSession, jsa: str) -> None:
         system.setOut(out)
 
 
+def _launch(builder: SparkSession.Builder, jsa: str, conf_dir: str, dump: bool) -> SparkSession:
+    """Start the driver JVM mapping the archive ``jsa``, or recording the
+    classes it loads for a dump to ``jsa`` when ``dump``."""
+    # -Xlog:cds*=off: the JVM warns on stdout when it cannot map an
+    # archive (and then starts without it)
+    flag = "-XX:+RecordDynamicDumpInfo" if dump else f"-XX:SharedArchiveFile={jsa}"
+    builder = builder.config("spark.driver.extraJavaOptions", f"{flag} -Xlog:cds*=off")
+    os.environ["SPARK_CONF_DIR"] = conf_dir
+    try:
+        return builder.getOrCreate()
+    finally:
+        del os.environ["SPARK_CONF_DIR"]
+
+
 def get_spark(app_name: str = "mmt-spark", **extra_conf: str) -> SparkSession:
     """Build a ``local[N]`` SparkSession with ``_DEFAULT_CONFS`` (N from
     ``SPARK_GRAFT_CPUS``, default ``*``), or fetch the active one. Keyword
@@ -224,7 +239,10 @@ def get_spark(app_name: str = "mmt-spark", **extra_conf: str) -> SparkSession:
 
     A call that launches the driver JVM maps a cached class-data archive
     of an earlier launch, about halving the start, or records one and
-    dumps it before returning, which slows that one start. It is skipped
+    dumps it before returning, which slows that one start. When the JVM
+    exits while mapping the archive, the call starts once more without
+    it, recording a fresh one, and deletes the old file once that start
+    succeeds. The archive is skipped
     when a JVM is already up, when the caller sets the driver's
     ``extraJavaOptions`` or ``extraClassPath``, ``SPARK_CONF_DIR`` or
     ``PYSPARK_SUBMIT_ARGS``, when the default conf dir holds more than
@@ -242,15 +260,25 @@ def get_spark(app_name: str = "mmt-spark", **extra_conf: str) -> SparkSession:
     else:
         jsa, conf_dir = archive
         dump = not os.path.exists(jsa)
-        # -Xlog:cds*=off: the JVM warns on stdout when it cannot map an
-        # archive (and then starts without it)
-        flag = "-XX:+RecordDynamicDumpInfo" if dump else f"-XX:SharedArchiveFile={jsa}"
-        builder = builder.config("spark.driver.extraJavaOptions", f"{flag} -Xlog:cds*=off")
-        os.environ["SPARK_CONF_DIR"] = conf_dir
         try:
-            spark = builder.getOrCreate()
-        finally:
-            del os.environ["SPARK_CONF_DIR"]
+            spark = _launch(builder, jsa, conf_dir, dump)
+        except PySparkRuntimeError as e:
+            # The JVM validates an archive's header, not its contents: a
+            # damaged file that passes (a truncated copy, say) crashes it
+            # while mapping, before it sends its port, on every start
+            # until the file goes. Start once more without it, recording a
+            # fresh one. The file goes only when that start succeeds: a
+            # launch that fails for another reason fails again, and then
+            # leaves a good archive where it was.
+            if dump or e.getCondition() != "JAVA_GATEWAY_EXITED":
+                raise
+            warnings.warn(f"driver JVM exited while mapping {jsa}; starting without it")
+            dump = True
+            spark = _launch(builder, jsa, conf_dir, dump)
+            try:
+                os.remove(jsa)
+            except FileNotFoundError:  # a concurrent start removed it
+                pass
         if dump:
             _dump_class_archive(spark, jsa)
     spark.sparkContext.setLogLevel("WARN")

@@ -128,6 +128,27 @@ def test_torn_dump_is_swept_and_never_mapped(launch, tmp_path):
     assert live.exists()
 
 
+def test_a_retry_that_fails_keeps_the_archive(launch, monkeypatch):
+    """A launch that fails for a reason other than the archive fails again
+    without it, and the archive stays: only a retry that starts deletes it."""
+    from pyspark.errors import PySparkRuntimeError
+
+    jsa, _ = session._class_archive({})
+    Path(jsa).write_bytes(b"archive")
+    dumps = []
+
+    def exits(builder, jsa, conf_dir, dump):
+        dumps.append(dump)
+        raise PySparkRuntimeError(errorClass="JAVA_GATEWAY_EXITED", messageParameters={})
+
+    monkeypatch.setattr(session, "_launch", exits)
+    with pytest.warns(UserWarning, match="exited while mapping"):
+        with pytest.raises(PySparkRuntimeError):
+            session.get_spark("mmt-archive-test")
+    assert dumps == [False, True]
+    assert Path(jsa).read_bytes() == b"archive"
+
+
 _START = """
 import json, sys
 from market_microstructure_toolkit_spark.session import get_spark
@@ -139,10 +160,12 @@ json.dump({
 """
 
 
-def test_first_start_dumps_and_next_start_maps(tmp_path):
+def _starter(tmp_path: Path):
+    """``start(n)``: a fresh process's ``get_spark`` under a cache dir in
+    ``tmp_path``; returns its JVM's arguments and class path, and the
+    process's stdout."""
     env = {k: v for k, v in os.environ.items() if k not in ("SPARK_CONF_DIR", "PYSPARK_SUBMIT_ARGS")}
     env.update(XDG_CACHE_HOME=str(tmp_path / "cache"), PYTHONPATH=str(REPO))
-    root = tmp_path / "cache" / "market_microstructure_toolkit_spark" / "cds"
 
     def start(n: int) -> dict:
         out = tmp_path / f"start{n}.json"
@@ -151,16 +174,24 @@ def test_first_start_dumps_and_next_start_maps(tmp_path):
             env=env, cwd=tmp_path, capture_output=True, text=True, timeout=300,
         )
         assert p.returncode == 0, p.stderr[-2000:]
-        assert p.stdout == ""
-        return json.loads(out.read_text())
+        return {**json.loads(out.read_text()), "stdout": p.stdout}
+
+    return start
+
+
+def test_first_start_dumps_and_next_start_maps(tmp_path):
+    start = _starter(tmp_path)
+    root = tmp_path / "cache" / "market_microstructure_toolkit_spark" / "cds"
 
     first = start(1)
+    assert first["stdout"] == ""
     (jsa,) = root.glob("*.jsa")
     assert "-XX:+RecordDynamicDumpInfo" in first["args"]
     assert not list(root.glob("*.tmp"))
     stamp = jsa.stat().st_mtime_ns
 
     second = start(2)
+    assert second["stdout"] == ""
     assert f"-XX:SharedArchiveFile={jsa}" in second["args"]
     assert "-XX:+RecordDynamicDumpInfo" not in second["args"]
     assert jsa.stat().st_mtime_ns == stamp
@@ -188,3 +219,22 @@ def test_first_start_dumps_and_next_start_maps(tmp_path):
     refused = version(default_conf + second["class_path"][len(conf_dir):])
     assert refused.returncode == 1
     assert "Unable to use shared archive" in refused.stdout + refused.stderr
+
+
+def test_damaged_archive_is_deleted_and_recorded_afresh(tmp_path):
+    """A truncated archive passes the JVM's header check and crashes it
+    while mapping; the start must still return a session and leave a
+    whole archive for the next one."""
+    start = _starter(tmp_path)
+    root = tmp_path / "cache" / "market_microstructure_toolkit_spark" / "cds"
+    start(1)
+    (jsa,) = root.glob("*.jsa")
+    with open(jsa, "r+b") as f:
+        f.truncate(5 * 2**20)
+
+    second = start(2)
+    assert "-XX:+RecordDynamicDumpInfo" in second["args"]
+    assert jsa.stat().st_size > 5 * 2**20
+    assert not list(root.glob("*.tmp"))
+    third = start(3)
+    assert f"-XX:SharedArchiveFile={jsa}" in third["args"]

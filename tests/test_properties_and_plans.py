@@ -126,15 +126,73 @@ def test_asof_join_is_sort_merge_not_pair_join(spark, sf_dir):
     assert "Window" in plan and "Union" in plan
 
 
-def test_row_metrics_is_shuffle_free(spark, sf_dir):
-    plan = _plan(spark, sf_dir, "book_row_metrics")
-    # pure projection AFTER the fixture spread: the only allowed
-    # exchange is spread()'s round-robin input re-split (a no-op on a
-    # cluster where the input arrives in many file splits) — no keyed
-    # shuffle, no join, nothing the METRICS themselves require
-    assert "Exchange hashpartitioning" not in plan
-    assert "Exchange rangepartitioning" not in plan
-    assert plan.count("Exchange") <= 1  # spread's RoundRobin only
+@pytest.fixture
+def no_aqe(spark):
+    """Executed plans as planned: AQE off for one test."""
+    prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", prev)
+
+
+def _exchanges(plan: str) -> list[str]:
+    return [ln.strip(" +-:") for ln in plan.splitlines() if "Exchange" in ln]
+
+
+def test_row_metrics_is_shuffle_free(spark, sf_dir, no_aqe):
+    # pure projection of the fixture: the only exchange is the book's
+    # keyed partitioning of a single-split input (none on a cluster where
+    # the input arrives in many file splits) — no join, no exchange of
+    # its own, nothing the METRICS themselves require
+    (ex,) = _exchanges(_plan(spark, sf_dir, "book_row_metrics"))
+    assert ex.startswith("Exchange hashpartitioning(symbol#"), ex
+    assert "REPARTITION_BY_COL" in ex, ex
+
+
+@pytest.mark.parametrize("name", ["book_rolling_corr", "book_level_stats"])
+def test_book_gates_reuse_the_keyed_book_exchange(spark, sf_dir, no_aqe, name):
+    # the per-symbol windows and the (symbol, side, level) aggregate all
+    # run on the book's own symbol partitioning: one exchange in the plan
+    plan = _plan(spark, sf_dir, name)
+    (ex,) = _exchanges(plan)
+    assert ex.startswith("Exchange hashpartitioning(symbol#"), ex
+    assert ex.split(")", 1)[0].count(",") == 1, ex  # (symbol, n) only
+    # it moves raw event columns: the book is derived above it, on one
+    # task per symbol, not below it on the single input split
+    below = plan[plan.index("Exchange"):]
+    assert "FileScan parquet" in below
+    for col in ("best_bid", "bid1_price", "bid1_size", "ask1_size"):
+        assert f" AS {col}#" not in below, col
+
+
+def test_rolling_corr_builds_from_few_py4j_calls(spark, sf_dir):
+    """The plain W10 path is SQL text: a warm construction makes a few
+    hundred py4j round trips, not one per Column node. Object releases
+    (``m\\nd\\n`` commands) follow Python's GC and are not counted."""
+    import gc
+
+    from market_microstructure_toolkit_spark.plans.queries import REGISTRY
+
+    build = REGISTRY["book_rolling_corr"].spark
+    build(spark, sf_dir)  # warm: the book and the size hint are memoized
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    calls = []
+
+    def counting(command, *a, **k):
+        if not command.startswith("m\nd\n"):
+            calls.append(command)
+        return send(command, *a, **k)
+
+    gc.collect()
+    client.send_command = counting
+    try:
+        build(spark, sf_dir)
+    finally:
+        del client.send_command
+    assert len(calls) <= 300, len(calls)
 
 
 def test_window_metrics_single_exchange(spark, sf_dir):

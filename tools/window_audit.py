@@ -1,7 +1,7 @@
 """Window-site scale audit (round-9 verdict ask #3).
 
 Scans every ``Window.partitionBy`` / ``Window.orderBy`` site in the
-package, classifies it against the RULES map below (keyed by
+package, and every ``over_sql(`` site (a window written as SQL text), classifies it against the RULES map below (keyed by
 (file basename, enclosing function) — stable across line drift), and
 writes the one-line-per-site audit table to ``docs/WINDOW_AUDIT.md``.
 
@@ -65,6 +65,10 @@ RULES: dict[tuple[str, str], tuple[str, str]] = {
     ("market_queries.py", "build"): (
         "dispatched",
         "plain branch of the W6 reset-RV dispatch (gap-group frame; segmented twin add_rolling_rv_reset_segmented)",
+    ),
+    ("market_queries.py", "_corr_surface"): (
+        "dispatched",
+        "plain branch of the W10 dispatch (lags of the OFI and return features; segmented twin rolling_segmented)",
     ),
     ("market_queries.py", "q_book_tail"): (
         "topk-grouplimit",
@@ -246,6 +250,10 @@ RULES: dict[tuple[str, str], tuple[str, str]] = {
         "helper",
         "canonical series window; every gate-level caller is dispatched or classified at its own site",
     ),
+    ("window_metrics.py", "add_ofi_l1"): (
+        "helper",
+        "canonical series window of the OFI operators, as SQL text for the lobster formula; every gate-level caller dispatches or is classified at its own site",
+    ),
     ("window_metrics.py", "add_rolling_rv_reset"): (
         "dispatched",
         "plain form of W6; gates dispatch to add_rolling_rv_reset_segmented",
@@ -263,6 +271,10 @@ RULES: dict[tuple[str, str], tuple[str, str]] = {
     ("window_metrics.py", "rolling_segmented"): (
         "segmented-internal",
         "(key, segment) rank, config-sized per-segment offset window, (key, chunk) local stages",
+    ),
+    ("window_metrics.py", "chunk_over_sql"): (
+        "segmented-internal",
+        "SQL text of rolling_segmented's (key, chunk) window: rows per partition bounded by chunk size",
     ),
     ("window_metrics.py", "add_position_segmented"): (
         "segmented-internal",
@@ -298,7 +310,9 @@ RULES: dict[tuple[str, str], tuple[str, str]] = {
     ),
 }
 
-SITE_RE = re.compile(r"Window\.(partitionBy|orderBy)\(")
+#: a Column-built window, or a window written as SQL text: every OVER
+#: clause in the package is built by window_metrics.over_sql
+SITE_RE = re.compile(r"Window\.(partitionBy|orderBy)\(|(?<!def )\bover_sql\(")
 DEF_RE = re.compile(r"\s*def (\w+)")
 
 
@@ -420,8 +434,8 @@ def render() -> str:
     lines = [
         "# Window-site scale audit (generated by tools/window_audit.py)",
         "",
-        "Every `Window.partitionBy` / `Window.orderBy` site in the package,",
-        "classified by its behavior when per-key data grows 100x. The audit",
+        "Every `Window.partitionBy` / `Window.orderBy` / `over_sql(` site in the",
+        "package, classified by its behavior when per-key data grows 100x. The audit",
         "is enforced: an unclassified site fails `tests/test_window_audit.py`.",
         "Class definitions live in the tool's module docstring.",
         "",
